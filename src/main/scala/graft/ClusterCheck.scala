@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale evidence for the clustering queries whose DuckDB oracles are
   * gate-scale only (q55/q65 — the recursive-CTE closure is O(E·cluster),
   * intractable at sf0.1; see COVERAGE.md): verifies the Spark results'
@@ -20,14 +18,7 @@ import org.apache.spark.sql.SparkSession
 object ClusterCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     import spark.implicits._
 
     val pairs = operators.Dedup.lshVerifiedPairs(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-hygiene audit: prints formatted physical plans for representative
   * queries so scan pruning (PushedFilters/ReadSchema), join strategies
   * (BroadcastHashJoin for dims), and WholeStageCodegen coverage can be
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     val dir = "/root/testdata/sf0.01"
     val targets = if (args.nonEmpty) args.toSeq
       else Seq("q02_filter_topk", "q05_nation_revenue", "q30_term_freq",

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -38,27 +40,25 @@ object Tables {
     * driver run keeps its proportionally smaller layout. */
   private def parallelFloor(spark: SparkSession, dir: String, name: String,
       df: DataFrame, key: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    // kill-switch (config seam + the A/B harness toggle): sysprop wins
-    // over env so a single JVM can alternate variants.
-    val enabled = sys.props.get("graft.parallel.floor")
-      .orElse(sys.env.get("SPARK_GRAFT_PARALLEL_FLOOR"))
-      .forall(v => !(v == "off" || v == "0" || v == "false"))
-    if (!enabled) return df
-    val p = Paths.get(s"$dir/$name.parquet")
     val bytes =
-      try {
-        if (Files.isDirectory(p)) {
-          val ls = Files.list(p)
-          try ls.mapToLong(f => try Files.size(f) catch { case _: Throwable => 0L }).sum
-          finally ls.close()
-        } else Files.size(p)
-      } catch { case _: Throwable => Long.MaxValue } // unknown → assume big
+      try sourceFiles(Paths.get(s"$dir/$name.parquet")).map(Files.size).sum
+      catch { case _: Throwable => Long.MaxValue } // unknown → assume big
     val cores = spark.sparkContext.defaultParallelism.toLong
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
     if (bytes < cores * openCost)
       df.repartition(spark.sessionState.conf.numShufflePartitions, col(key))
     else df
+  }
+
+  /** Every regular file under a table's source path, recursively and in
+    * path order (the path itself when it is a file). The one walk behind
+    * both the [[parallelFloor]] size probe and the [[preparedTable]]
+    * fingerprint, so a nested or partitioned parquet directory is sized
+    * and fingerprinted by its data files, not by its directory entries. */
+  private def sourceFiles(src: Path): Seq[Path] = {
+    val w = Files.walk(src)
+    try w.filter(Files.isRegularFile(_)).sorted().iterator().asScala.toVector
+    finally w.close()
   }
 
   def region(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "region")
@@ -92,7 +92,8 @@ object Tables {
 
   /** `documents` behind the [[parallelFloor]] — OPT-IN, for operators
     * whose per-row work is heavy enough to earn the extra exchange
-    * (measured r17, same-JVM on/off A/B over the full headline set):
+    * (measured r17, same-JVM on/off A/B over the full headline set;
+    * ProfR17Floor in BASELINE.md "Retired harnesses"):
     * applied blanket to every documents read the floor LOST 0.81×
     * overall (q30 0.57×, q44 0.39×, q259 0.60× — the barrier costs more
     * than 5000 docs of map work saves), but the real-codec multimodal
@@ -107,7 +108,7 @@ object Tables {
     * downstream selects/filters still resolve. */
   def tableOrEmpty(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+    if (Files.exists(Paths.get(path)))
       spark.read.schema(schema).parquet(path)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -143,17 +144,14 @@ object Tables {
     * (column metadata `graft.lc_of = c`) for each requested column. */
   private def preparedTable(spark: SparkSession, dir: String, table: String,
                             lcCols: Seq[String]): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val src = Paths.get(s"$dir/$table.parquet")
     val fingerprint = {
       val parts =
-        if (Files.isDirectory(src)) {
-          val ls = Files.list(src)
-          try ls.sorted().map[String](p =>
-            s"${p.getFileName}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
-            .toArray.mkString("|")
-          finally ls.close()
-        } else s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
+        if (Files.isDirectory(src))
+          sourceFiles(src).map(p =>
+            s"${src.relativize(p)}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
+            .mkString("|")
+        else s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
       // prepV bumps whenever the prepared schema/metadata contract
       // changes — an old build's materialization must never be served
       // to a build that expects different columns. Superseded

@@ -166,23 +166,14 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.LowercaseContainsRewrite)
+    val spark = Session("spark.scheduler.mode" -> "FAIR")
     // Default PAR = 2× cores (r16): most of a small-SF dump's cost is
     // single-threaded DRIVER work (analysis/optimize/codegen), which
     // oversubscribes well past the core count — measured warm at
     // CPUS=4 on sf0.01: PAR=4 247 s, PAR=8 103 s, PAR=12 121 s
     // (contention inflects past 2×).
     run(spark, sfDir, outDir, only,
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_DUMP_PAR", (cpus.toInt * 2).toString).toInt))
+      math.max(1, sys.env.getOrElse("SPARK_GRAFT_DUMP_PAR", (Session.cores * 2).toString).toInt))
     spark.stop()
     if (allFailed) sys.exit(3)
   }

@@ -319,12 +319,6 @@ object Corpus12 {
   /** (doc_id, url, canon_url) — the stateless canonicalization stage,
     * shared by q266 and its streaming twin (`StatefulOps.urlDedupStream`
     * runs it unchanged on the stream; no shuffle, no state). */
-  /** Harness accessors (ProfR17FunnelAB replicates the r16 funnel
-    * verbatim for its A/B baseline; these just re-export the private
-    * column builders it needs). */
-  private[graft] def canonUrlCol: org.apache.spark.sql.Column = canonCol(urlCol)
-  private[graft] def hostColForProf: org.apache.spark.sql.Column = hostCol
-
   private[graft] def canonUrls(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), urlCol.as("url"))
       .withColumn("canon_url", canonCol(col("url")))
@@ -371,7 +365,8 @@ object Corpus12 {
     * barriers): the r15 form pinned EIGHT eager localCheckpoints, one
     * per stage, and each pin's job fans out into 3-5 AQE stage-jobs —
     * a measured ~47 sequential driver jobs per funnel build at sf0.1,
-    * all barrier floor (ProfR16b; the data is 5000 docs). Every PER-DOC
+    * all barrier floor (ProfR16b, BASELINE.md "Retired harnesses"; the
+    * data is 5000 docs). Every PER-DOC
     * gate decision (robots rule match, lang-id argmax, blocklist
     * tokens, Gopher within-doc battery, the driver-constant classifier
     * margin) is a pure function of the document — corpus-independent —
@@ -390,7 +385,8 @@ object Corpus12 {
     *   s2 — the cap-survivor TEXT, bounded by cap × |hosts| BY
     *        CONSTRUCTION, pinned once for its five text readers
     *        (the three post-cap gate decisions, the chunk scrub, the
-    *        PII pass) — the r12 ProfPinPolicy text-pin policy;
+    *        PII pass) — the r12 text-pin policy (ProfPinPolicy,
+    *        BASELINE.md "Retired harnesses");
     *   w3 — the three post-cap stateless flags over s2, narrow.
     * The chunk-scrub ids (k4) lost their pin in r17 — see the PASS 5
     * comment: ReuseExchange already computes them once inside the one
@@ -406,8 +402,7 @@ object Corpus12 {
     * q268 oracle re-certifies per gate run. Measured at sf0.1
     * (min-of-2, noop sink): q268 5.68 → see OPTIMIZATION_r16.md. */
   private[graft] def hygieneStages(
-      docs0: DataFrame, cap: Int = 10, minRetained: Double = 0.2,
-      pinW3: Boolean = true): Seq[(String, DataFrame)] = {
+      docs0: DataFrame, cap: Int = 10, minRetained: Double = 0.2): Seq[(String, DataFrame)] = {
     val docs = docs0.select(col("doc_id"), col("text"), col("n_chars"))
     // PASS 1 — every pre-cap per-doc decision + election key in one
     // scan, composed as APPENDED COLUMNS (no doc_id joins — a per-gate
@@ -451,7 +446,8 @@ object Corpus12 {
     val s1c = col("f_robots") && col("won_url")
     val s15c = s1c && col("f_lang")
     // PASS 3 — the cap-survivor text, bounded by cap × |hosts|, pinned
-    // once for its five text readers (r12 ProfPinPolicy policy).
+    // once for its five text readers (r12 text-pin policy, ProfPinPolicy
+    // in BASELINE.md "Retired harnesses").
     val s2 = docs.join(
       w.filter(s15c && col("won_quota")).select("doc_id"), Seq("doc_id"), "left_semi")
       .localCheckpoint()
@@ -465,18 +461,18 @@ object Corpus12 {
     // battery's presentation sort are gone, and with them the last
     // shuffle in this pass. That makes w3 a zero-exchange projection
     // over the pinned s2; dropping its PIN was then measured (same-JVM
-    // interleaved A/B, ProfR17FunnelAB, two sessions) and LOST in 9 of
+    // interleaved A/B, ProfR17FunnelAB in BASELINE.md "Retired harnesses",
+    // two sessions) and LOST in 9 of
     // 11 rounds (min 3.14 vs 3.53 s): without the pin each audit stat
     // re-runs the battery+clf flag work inside its own broadcast
     // subtree build, and those builds serialize — one cheap barrier
-    // beats four re-evaluations even on a 240-doc s2. The pin stays
-    // (pinW3 keeps it togglable for the harness).
-    val w3raw = Corpus14.withQualityMargin(Corpus14.withBlocklist(withGopherKeep(s2)))
+    // beats four re-evaluations even on a 240-doc s2. The pin stays.
+    val w3 = Corpus14.withQualityMargin(Corpus14.withBlocklist(withGopherKeep(s2)))
       .select(col("doc_id"), col("n_chars"),
         (col("blocked_total") === 0).as("f_block"),
         col("f_gopher"),
         (col("clf_margin") > Corpus14.QThreshold).as("f_clf"))
-    val w3 = if (pinW3) w3raw.localCheckpoint() else w3raw
+      .localCheckpoint()
     val s35 = s2.join(
       w3.filter(col("f_block") && col("f_gopher") && col("f_clf")).select("doc_id"),
       Seq("doc_id"), "left_semi")
@@ -487,7 +483,8 @@ object Corpus12 {
     // k4's internal exchanges (the chunk-fp and doc_id aggregates) are
     // byte-identical subtrees there, so ReuseExchange computes them
     // once; the pin bought no reuse, only a sequential barrier chain of
-    // ~4 stage-jobs. Measured (ProfR17PinMask, same-JVM interleaved,
+    // ~4 stage-jobs. Measured (ProfR17PinMask in BASELINE.md "Retired harnesses",
+    // same-JVM interleaved,
     // two sessions): no-k4 min 2.83/2.87 s vs all-pins 3.10/3.05 s,
     // rows identical; dropping the w or w3 pin instead LOST (3.21 /
     // 3.48 s mins) — their suffixes (elections / per-row battery+clf
@@ -611,13 +608,14 @@ object Corpus12 {
   /** MEASURED per-gate unit costs (ns/doc) for q281's cost-weighted
     * ranking — the number the r12 audit left to the consumer ("a regex
     * gate and the classifier's margin fold are not equal work"). Source:
-    * ProfGateCost, which times each gate's decision frame standalone at
+    * ProfGateCost (BASELINE.md "Retired harnesses"), which timed each
+    * gate's decision frame standalone at
     * sf0.01 AND sf0.1 in one JVM (rounds interleaved across sizes, the
     * flag forced through an aggregate so Catalyst can't prune the work)
     * and extracts the MARGINAL per-doc cost by size differencing —
     * (t_5000 − t_500)/4500 — because fixed job-scheduling overhead
     * (~0.2-0.3 s) otherwise dominates every cheap gate at these corpus
-    * sizes. Two independent harness runs (2026-08-16, local[32]):
+    * sizes. Two independent runs (2026-08-16, local[32]):
     * robots 24k/9k, lang_id 59k/43k, blocklist 19k/16k, gopher
     * 164k/252k, classifier 37k/26k — the magnitudes swing ~2× with the
     * host, the ORDER (blocklist ≈ robots < classifier < lang_id ≪
@@ -1060,7 +1058,8 @@ object Corpus12 {
       // rather than assumed independent — PLUS (r13) the cost-weighted
       // ranking the r12 audit left to the consumer: each evaluation
       // priced at the gate's MEASURED unit cost (gateUnitCostNs, the
-      // ProfGateCost size-differenced ns/doc), with `compliant` marking
+      // ProfGateCost size-differenced ns/doc, BASELINE.md "Retired harnesses"),
+      // with `compliant` marking
       // the legally runnable orders (robots first). Integer-exact end
       // to end. See gateOrdering for the cube shape.
       //

@@ -278,7 +278,8 @@ object Corpus14 {
     * q279's holdout-NLL is no longer monotone in sharpening (the two
     * wrong-side-at-any-T rows blow up as T → 0, so the argmin is
     * interior). Every boundary margin clears every sweep threshold by
-    * ≥ 2.5e-3 (ProfHoldout measurement), far above the 1e-6 hash pin. */
+    * ≥ 2.5e-3 (ProfHoldout in BASELINE.md "Retired harnesses"), far
+    * above the 1e-6 hash pin. */
   private[graft] val qualityHoldout: Seq[(String, String)] = Seq(
     ("merge window batch key data scan join stream order", "quality"),
     ("table group agg filter sort query hash column stream", "quality"),
@@ -453,7 +454,8 @@ object Corpus14 {
     * with the boundary holdout rows the NLL(T) curve has a real interior
     * minimum (the two wrong-side-at-any-T rows blow up as T → 0 while
     * the correct small-margin rows stop paying), measured at T = 2^-7
-    * (ProfHoldout: 0.6335 at T=1 falling to 0.1240 at 2^-7, rising to
+    * (ProfHoldout in BASELINE.md "Retired harnesses": 0.6335 at T=1
+    * falling to 0.1240 at 2^-7, rising to
     * 0.3063 at 2^-9 and +∞ by 2^-12) — the grid must cross the minimum
     * so the argmin is a finding, not a grid edge. */
   private[graft] val temperatureGrid: Seq[Double] =
@@ -748,7 +750,8 @@ object Corpus14 {
     // ONE reference pass: the OOV-mapped bigram table is PINNED
     // (localCheckpoint — the q268 corpus-fraction rule: a tiny
     // ≤(V+1)²-bounded frame ending a scan+gate+join+explode lineage that
-    // three consumers would otherwise re-run; ProfQ283 measured the
+    // three consumers would otherwise re-run; ProfQ283 (BASELINE.md "Retired harnesses")
+    // measured the
     // unpinned three-frame build at ~29 s vs ~3 s pinned at sf0.1), and
     // the other two model tables DERIVE from it exactly: c1 = Σ_w2 c12
     // (the prefix count IS the bigram-table marginal), and

@@ -101,8 +101,8 @@ object Corpus2 {
     * q117 aggregates it into per-pair evidence; q120 turns it into the
     * scrub action. */
   /** The positional interned-8-gram relation g(doc_id, pos, g64) —
-    * factored out of [[sharedSpanIslands]] so the profiling harness
-    * times exactly the shipped expression (one definition). */
+    * factored out of [[sharedSpanIslands]] and shared by q117, q120 and
+    * q261 (one definition). */
   private[graft] def posGrams8(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), expr(toksExpr).as("w"))
       .select(col("doc_id"), posexplode(expr(
@@ -122,7 +122,8 @@ object Corpus2 {
     // pos, g64 — ~20 B per token position, the pinnedLshState
     // discipline; never gram text), and in a production span-dedup
     // pipeline this relation IS the positional fingerprint index the
-    // job materializes. Measured (ProfR17Spans, same-JVM interleaved):
+    // job materializes. Measured (ProfR17Spans in BASELINE.md "Retired harnesses",
+    // same-JVM interleaved):
     // min 2.10 → 1.37 s at sf0.1, rows identical.
     val g = posGrams8(docs).localCheckpoint()
     val dfOk = g.groupBy("g").agg(countDistinct("doc_id").as("df"))
@@ -242,7 +243,8 @@ object Corpus2 {
     // codegen of the exponential tree or the window/broadcast work
     // above them. Pinning the vocab-sized symbolization after each
     // round keeps the plan one round deep at any merge count. Measured
-    // same-JVM interleaved A/B at sf0.1 (ProfBpeAB, min-of-4, noop
+    // same-JVM interleaved A/B at sf0.1 (ProfBpeAB in
+    // BASELINE.md "Retired harnesses", min-of-4, noop
     // sink): unroll 7.10 s vs ckpt 3.82 s, value-identical rows. (The
     // r3 note that persist() of s0 alone was SLOWER still holds — an
     // InMemoryRelation under the un-pinned 2^rounds tree blocks

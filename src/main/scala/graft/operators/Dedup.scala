@@ -283,11 +283,6 @@ object Dedup {
         round(col("i") * lit(1.0) /
           (size(col("wa")) + size(col("wb")) - col("i")), 4).as("jaccard"))
 
-  /** Harness accessor (ProfR17Q143 times the ladder's rungs standalone). */
-  private[graft] def neardupEvalHitsForProf(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    neardupEvalHits(s, dir)
-
   private def neardupEvalHits(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val t = pinnedLshState(tokenSets(s, dir))

@@ -155,7 +155,8 @@ object MediaCodec {
     val out = new java.io.ByteArrayOutputStream()
     // explicit MEMORY-cache output stream: ImageIO.write's default
     // useCache=true backs the stream with a TEMP FILE, i.e. one
-    // filesystem create+write+delete per encode — measured (ProfQ254,
+    // filesystem create+write+delete per encode — measured (ProfQ254 in
+    // BASELINE.md "Retired harnesses",
     // sf0.1 local[32], cache toggled per round in one JVM) as 2.6× on
     // the full q254 and THE mechanism behind its 1.59-2.74 s host band:
     // temp-file churn is filesystem-pressure-dependent, pure-memory

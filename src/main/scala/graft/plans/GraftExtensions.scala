@@ -93,9 +93,10 @@ object LowercaseContainsRewrite extends Rule[LogicalPlan] {
   }
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` — the library's
-  * session extensions (currently the lowercase-twin rewrite; Verify and
-  * Bench also register it via `spark.experimental.extraOptimizations`). */
+/** The library's session extensions (currently the lowercase-twin
+  * rewrite). [[graft.Session]] registers them on every session it builds;
+  * an external session can load them with
+  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     ext.injectOptimizerRule(_ => LowercaseContainsRewrite)

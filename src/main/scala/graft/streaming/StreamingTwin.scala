@@ -174,13 +174,7 @@ object StreamingTwin {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val res = runTumblingDemo(spark, "/root/testdata/sf0.001")
     println(s"STREAM tumbling rows=${res.count()}")
     res.orderBy("win_start", "event_type").show(5, false)

@@ -84,4 +84,38 @@ class PartitioningSpec extends AnyFunSuite with SparkSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  test("prepared-table fingerprint walks a nested partition directory") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    // A partitioned documents.parquet: its data files sit one level down,
+    // so the table directory's own entries are partition directories,
+    // whose size and mtime stay put when a data file is rewritten in place.
+    val root = Files.createTempDirectory("graft_nested")
+    val table = root.resolve("documents.parquet")
+    val scratch = root.resolve("scratch")
+    def write(n: Int, to: Path): Unit =
+      Tables.documents(spark, sfDir).filter(col("doc_id") < n)
+        .withColumn("part", lit(0)).coalesce(1)
+        .write.partitionBy("part").parquet(to.toString)
+    def files(p: Path): Seq[Path] = {
+      val ls = Files.list(p.resolve("part=0"))
+      try ls.iterator().asScala.toVector.sortBy(_.getFileName.toString.endsWith(".crc"))
+      finally ls.close()
+    }
+    def rows: Long = spark.read.parquet(table.toString).count()
+    write(10, table)
+    val before = rows
+    assert(Tables.preparedDocuments(spark, root.toString).count() == before)
+    // Rewrite the nested data file (and its checksum) in place with 30
+    // rows: no directory entry is added or removed anywhere.
+    write(30, scratch)
+    files(table).zip(files(scratch)).foreach { case (dst, src) =>
+      Files.write(dst, Files.readAllBytes(src))
+    }
+    val after = rows
+    assert(after > before)
+    assert(Tables.preparedDocuments(spark, root.toString).count() == after,
+      "a stale prepared table was served for a rewritten nested file")
+  }
 }

@@ -53,13 +53,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
     // The rule's second declared family (r4 verdict #6): unlike
     // flagship/q89, q02 never names the _lc column — containsCI builds
     // coalesce(contains(lower(p_name)), false) and the RULE retargets it.
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before :+ plans.LowercaseContainsRewrite
-    try {
-      val p = plan("q02_filter_topk")
-      assert(p.contains("StringContains(p_name_lc"), p.take(800))
-      assert(!p.contains("lower(p_name"), p.take(800))
-    } finally spark.experimental.extraOptimizations = before
+    // The rule comes from the shared session (graft.Session), so this
+    // pins that the tests run the same optimizer as the gate and bench.
+    val p = plan("q02_filter_topk")
+    assert(p.contains("StringContains(p_name_lc"), p.take(800))
+    assert(!p.contains("lower(p_name"), p.take(800))
   }
 
   test("q02 scan prunes to the projected columns") {

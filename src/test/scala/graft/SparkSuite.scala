@@ -2,21 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared SparkSession for the whole test JVM (Test / fork := true). */
+/** One shared SparkSession for the whole test JVM (Test / fork := true),
+  * built by the same factory as the mains, so tests run the gate's
+  * optimizer. */
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep bucketed-table test artifacts out of the repo tree
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session(
+    // keep bucketed-table test artifacts out of the repo tree
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
 }
 
 trait SparkSuite {
