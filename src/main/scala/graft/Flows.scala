@@ -101,13 +101,14 @@ object Flows {
     * hive-partitioned by source for per-source training readers, with
     * the learned merge table written alongside as the model artifact.
     * Same input-agnostic bodies as the oracled queries — the API cannot
-    * drift from the correctness gate. Returns the landed encoded
-    * layout. */
+    * drift from the correctness gate. Training runs once: encoding reads
+    * each word's symbol count back from the landed artifact. Returns the
+    * landed encoded layout. */
   def tokenizerFlow(docs: DataFrame, rounds: Int, outDir: String): DataFrame = {
-    val (finalSyms, _) = operators.Corpus2.bpeSymbolization(docs, rounds)
-    val ws = finalSyms.groupBy("word").agg(count(lit(1)).as("n_syms"))
     operators.Corpus2.bpeMerges(docs, rounds)
       .write.mode("overwrite").parquet(s"$outDir/_tokenizer")
+    val ws = docs.sparkSession.read.parquet(s"$outDir/_tokenizer")
+      .select(col("word"), size(split(col("syms"), " ")).cast("long").as("n_syms"))
     val encoded = docs.select(col("doc_id"), col("source"),
         explode(expr(operators.TextAnalytics.toksExpr)).as("word"))
       .join(broadcast(ws), "word")

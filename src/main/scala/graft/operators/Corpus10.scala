@@ -620,8 +620,8 @@ object Corpus10 {
         // floor at sf0.01 warm. The transition table is STATE-SPACE
         // sized (corpus-size-independent by construction), so the
         // iteration is control-plane math: collect it once — the q73
-        // KeywordTree-frontier / bpeTrainIterative discipline for
-        // driver-scale iterates — and fold the rounds in Scala,
+        // KeywordTree-frontier discipline for driver-scale iterates —
+        // and fold the rounds in Scala,
         // replicating the previous plan's summation orders EXACTLY
         // (every Spark-side sum folded array_sort(collect_list(...)) in
         // ascending key order; the Scala folds sort by the same keys,

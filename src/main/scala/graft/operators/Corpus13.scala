@@ -118,7 +118,7 @@ object Corpus13 {
     prFinish(step(step(nodes.withColumn("t", lit(S)))), ow, nodes)
   }
 
-  /** The REAL-ROUND-COUNT form (the bpeTrainIterative discipline): each
+  /** The REAL-ROUND-COUNT form (the per-round pin discipline): each
     * round's host-sized iterate is pinned before the next round reads
     * it, so the plan stays one-join-one-aggregate deep at ANY round
     * count instead of growing a 2^rounds lineage. Corpus13Spec proves

@@ -194,92 +194,43 @@ object Corpus2 {
         coalesce(col("clean_md5"), md5(lit(""))).as("clean_md5"))
   }
 
-  /** One BPE merge round over a symbolization relation
-    * (word, freq, pos, sym) with `pos` dense per word. Declarative end
-    * to end: the argmax pair is a 1-row broadcast (no driver collect),
-    * and greedy LEFT-TO-RIGHT NON-OVERLAPPING application — the part of
-    * BPE that looks imperative — is windows + gaps-and-islands:
-    * consecutive matches of the winning pair form islands, alternating
-    * island positions activate, and a row consumed by its left
-    * neighbor's merge drops out. Everything is partitioned by word.
-    * Returns (next symbolization re-indexed densely, the 1-row winner
-    * (b_sym, b_nxt)). */
-  def bpeRound(syms: DataFrame): (DataFrame, DataFrame) = {
-    val wOrd = Window.partitionBy("word").orderBy("pos")
-    val paired = syms.withColumn("nxt", lead("sym", 1).over(wOrd))
-    val best = paired.filter(col("nxt").isNotNull)
-      .groupBy("sym", "nxt").agg(sum("freq").as("cnt"))
-      .orderBy(col("cnt").desc, col("sym"), col("nxt")).limit(1)
-      .select(col("sym").as("b_sym"), col("nxt").as("b_nxt"))
-    val next = paired.crossJoin(broadcast(best))
-      .withColumn("m", col("nxt").isNotNull &&
-        col("sym") === col("b_sym") && col("nxt") === col("b_nxt"))
-      .withColumn("isl",
-        col("pos") - sum(when(col("m"), 1L).otherwise(0L)).over(wOrd))
-      .withColumn("act", col("m") &&
-        ((col("pos") - min(when(col("m"), col("pos")))
-          .over(Window.partitionBy("word", "isl"))) % 2) === lit(0))
-      .withColumn("prev_act", coalesce(lag("act", 1).over(wOrd), lit(false)))
-      .filter(!col("prev_act"))
-      .select(col("word"), col("freq"),
-        (row_number().over(wOrd) - 1).cast("int").as("pos2"),
-        when(col("act"), concat(col("sym"), col("nxt"))).otherwise(col("sym")).as("sym"))
-      .withColumnRenamed("pos2", "pos")
-    (next, best)
-  }
-
-  /** Learn `rounds` BPE merges on the corpus word-frequency table.
-    * Returns the final symbolization in ROW form (word, freq, pos, sym)
-    * plus each round's 1-row winner — q121 aggregates it per word, q122
-    * joins it back onto documents to encode. */
-  def bpeSymbolization(docs: DataFrame, rounds: Int): (DataFrame, Seq[(Int, DataFrame)]) = {
-    val words = docs.select(explode(expr(toksExpr)).as("word"))
+  /** BPE training (Sennrich et al.) on the corpus word-frequency table:
+    * the (word, freq) vocab feeds ONE [[graft.functions.BpeTrainer]]
+    * aggregate that learns all `rounds` merges in memory, and its 1-row
+    * merge list broadcasts back onto the vocab, where
+    * [[graft.functions.BpeApply]] replays it per word. Returns
+    * (word, freq, syms: array<string>, merges: array<struct<sym, nxt>>);
+    * empty when fewer than `rounds` merges can be learned. No window, no
+    * pin and no driver collect: any merge count costs one vocab-sized
+    * aggregate, and BPE never touches the corpus after the word count. */
+  def bpeTrain(docs: DataFrame, rounds: Int): DataFrame = {
+    val vocab = docs.select(explode(expr(toksExpr)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    // Checkpoint-per-round (r16 — the bpeTrainIterative pin discipline,
-    // without its driver collect): the unrolled chain references its
-    // input twice per round (argmax + application), so the subtree
-    // DOUBLES per round — 2^rounds copies of s0 in the final plan —
-    // and exchange reuse recovers only the shuffles, not the planning/
-    // codegen of the exponential tree or the window/broadcast work
-    // above them. Pinning the vocab-sized symbolization after each
-    // round keeps the plan one round deep at any merge count. Measured
-    // same-JVM interleaved A/B at sf0.1 (ProfBpeAB in
-    // BASELINE.md "Retired harnesses", min-of-4, noop
-    // sink): unroll 7.10 s vs ckpt 3.82 s, value-identical rows. (The
-    // r3 note that persist() of s0 alone was SLOWER still holds — an
-    // InMemoryRelation under the un-pinned 2^rounds tree blocks
-    // exchange reuse; the per-round pin removes that tree entirely.)
-    // The pinned state is vocab-sized — never corpus-sized — so the
-    // 100 TB story is unchanged (BPE never touches the corpus after
-    // the first aggregate).
-    val s0 = words.select(col("word"), col("freq"),
-      posexplode(expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-        .as(Seq("pos", "sym")))
-      .localCheckpoint()
-    (1 to rounds).foldLeft((s0, Seq.empty[(Int, DataFrame)])) {
-      case ((s, bs), r) =>
-        val (s2, b) = bpeRound(s)
-        (s2.localCheckpoint(), bs :+ (r -> b.localCheckpoint()))
-    }
+    val trainer = udaf(new graft.functions.BpeTrainer(rounds))
+    val merges = vocab.agg(trainer(col("word"), col("freq")).as("merges"))
+      .filter(size(col("merges")) === rounds)
+    vocab.crossJoin(broadcast(merges))
+      .select(col("word"), col("freq"),
+        graft.functions.BpeApply.bpeApply(col("word"), col("merges")).as("syms"),
+        col("merges"))
   }
 
   /** q121's body, input-agnostic (needs `doc_id`, `text`): every word's
     * final symbolization plus the learned merge sequence (merge columns
     * are constant across rows). */
-  def bpeMerges(docs: DataFrame, rounds: Int): DataFrame = {
-    val (finalSyms, bests) = bpeSymbolization(docs, rounds)
-    val out = finalSyms.groupBy("word")
-      .agg(max("freq").as("freq"),
-        expr("array_join(transform(array_sort(collect_list(struct(pos, sym))), x -> x.sym), ' ')")
-          .as("syms"))
-    bests.foldLeft(out) { case (df, (r, b)) =>
-      df.crossJoin(broadcast(
-        b.select(concat(col("b_sym"), lit("+"), col("b_nxt")).as(s"merge$r"))))
-    }
-  }
+  def bpeMerges(docs: DataFrame, rounds: Int): DataFrame =
+    bpeTrain(docs, rounds).select(
+      Seq(col("word"), col("freq"), array_join(col("syms"), " ").as("syms")) ++
+        (1 to rounds).map { r =>
+          val m = col("merges")(r - 1)
+          concat(m("sym"), lit("+"), m("nxt")).as(s"merge$r")
+        }: _*)
 
   /** The DuckDB CTE chain for one BPE round r (consuming s{r-1},
-    * defining s{r} and b{r}) — the oracle-side twin of [[bpeRound]]. */
+    * defining s{r} and b{r}) — the oracle-side twin of [[bpeTrain]],
+    * one merge per round: word-partitioned windows + gaps-and-islands
+    * (consecutive matches of the winning pair form islands, alternating
+    * island positions activate — greedy left-to-right non-overlapping). */
   private def bpeRoundDuckCte(r: Int): String = {
     val (p, i) = (s"s${r - 1}", r)
     s"""p$i AS (SELECT word, freq, pos, sym,
@@ -299,33 +250,6 @@ object Corpus2 {
        |row_number() OVER (PARTITION BY word ORDER BY pos) - 1 AS pos,
        |CASE WHEN act THEN sym || nxt ELSE sym END AS sym
        |FROM g$i WHERE NOT prev_act)""".stripMargin.replace("\n", " ")
-  }
-
-  /** Iterative BPE training — the production path for merge counts
-    * beyond q121's 3-round unrolled/oracled form: each round's winner is
-    * a 1-row driver collect (control plane, like KeywordTree's
-    * frontier), and the symbolization is localCheckpoint'ed per round so
-    * the plan stays ONE round deep no matter how many merges are
-    * learned (the unrolled chain doubles its subtree per round). The
-    * checkpointed state is vocab-sized. Returns the final symbolization
-    * rows and the learned merges in order. */
-  def bpeTrainIterative(docs: DataFrame, rounds: Int): (DataFrame, Seq[String]) = {
-    val words = docs.select(explode(expr(toksExpr)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-    var s = words.select(col("word"), col("freq"),
-      posexplode(expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-        .as(Seq("pos", "sym")))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[String]
-    for (_ <- 1 to rounds) {
-      val (s2, b) = bpeRound(s)
-      val best = b.collect()
-      if (best.nonEmpty) {
-        merges += s"${best.head.getString(0)}+${best.head.getString(1)}"
-        s = s2.localCheckpoint()
-      }
-    }
-    (s, merges.result())
   }
 
   /** q118's body, input-agnostic (needs `doc_id`, `text`): per-document
@@ -932,18 +856,15 @@ object Corpus2 {
 
     QueryDef(
       "q121_bpe_merges",
-      // BPE tokenizer training (Sennrich et al.) as a DECLARATIVE Spark
-      // job: 3 merge rounds learned on the corpus word-frequency table,
-      // reporting every word's final symbolization and the learned merge
-      // sequence. The scale story is that BPE never touches the corpus
-      // after the first aggregate — symbol work runs on the VOCAB table
-      // (O(|vocab|) rows at any corpus size), every window is
-      // word-partitioned, and the argmax pair is a 1-row broadcast, so
-      // the same plan trains a 50k-merge vocabulary on a 100 TB corpus
-      // (more rounds = a longer chain or Components-style iterate-with-
-      // checksum; the per-round shape is fixed). Greedy non-overlapping
-      // merge application — BPE's imperative-looking core — is
-      // gaps-and-islands + alternating parity, exactly oracle-able.
+      // BPE tokenizer training (Sennrich et al.): 3 merge rounds learned
+      // on the corpus word-frequency table, reporting every word's final
+      // symbolization and the learned merge sequence. The scale story is
+      // that BPE never touches the corpus after the first aggregate —
+      // training is one aggregate over the VOCAB table (O(|vocab|) rows
+      // at any corpus size) and the merge list is a 1-row broadcast
+      // replayed per word, so the plan is the same for 3 merges or 50k.
+      // The oracle unrolls the rounds as windows + gaps-and-islands
+      // (greedy non-overlapping application, exactly oracle-able).
       (s, dir) => bpeMerges(Tables.documents(s, dir), 3).orderBy("word"),
       Some(s"""WITH w0 AS (SELECT unnest($toksDuck) AS word FROM documents),
               |words AS (SELECT word, count(*) AS freq FROM w0 GROUP BY 1),
@@ -973,8 +894,7 @@ object Corpus2 {
       // aggregate.
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val (finalSyms, _) = bpeSymbolization(docs, 3)
-        val ws = finalSyms.groupBy("word").agg(count(lit(1)).as("n_syms"))
+        val ws = bpeTrain(docs, 3).select(col("word"), size(col("syms")).cast("long").as("n_syms"))
         docs.select(col("doc_id"), explode(expr(toksExpr)).as("word"))
           .join(broadcast(ws), "word")
           .groupBy("doc_id")

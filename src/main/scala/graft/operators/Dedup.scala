@@ -260,9 +260,14 @@ object Dedup {
     * verified outputs per run — the fp60 interning discipline. Payoff:
     * the band self-join keys and the bucket shuffle carry 8-byte longs
     * instead of 32-char md5 hex (guide §2.3 narrower types; measured
-    * pairs 1.11 → 0.99 s, full verify 1.43 → 1.28 s at sf0.1). */
+    * pairs 1.11 → 0.99 s, full verify 1.43 → 1.28 s at sf0.1).
+    * NULL signatures (an empty or null token set) give a NULL bucket,
+    * as md5 of a null concat does: xxhash64 skips null inputs, so
+    * unguarded every such document would share one bucket per band and
+    * pair with every other (DedupSpec's empty-corpus fixture). */
   private[graft] val bandsLongExpr =
-    "transform(sequence(0, 2), b -> xxhash64(b, sigs[2*b], sigs[2*b+1]))"
+    "transform(sequence(0, 2), b -> IF(sigs[2*b] IS NULL OR sigs[2*b+1] IS NULL, " +
+      "CAST(NULL AS BIGINT), xxhash64(b, sigs[2*b], sigs[2*b+1])))"
 
   /** [[bandHashes]] over a pinned LSH-state frame (n precomputed);
     * long-valued buckets — see [[bandsLongExpr]]. */

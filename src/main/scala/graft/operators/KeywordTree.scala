@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** M6: recursive keyword-tree expansion (reference: depth-limited DFS with
   * a visited set, scrappy.py:431-493), as level-synchronous frontier
@@ -17,11 +18,19 @@ import org.apache.spark.sql.functions._
   *
   * Scale: the frontier is ≤ fanout^depth strings (control plane); each
   * level is one broadcast join + one hash-agg + one window over the corpus.
-  * The collect() only ever moves the child term list, never data rows.
+  * Each level's collect() moves only its ≤ fanout·|frontier| edges (the
+  * next frontier and that level's result rows), never corpus rows; the
+  * returned edge table is a driver-local relation over them.
   */
 object KeywordTree {
 
   private val toksExpr = TextAnalytics.toksExpr
+
+  /** (parent, child, depth, cnt) — the nullability the distributed
+    * per-level query derives: a child is an exploded non-null token. */
+  private val EdgeSchema = StructType(Seq(
+    StructField("parent", StringType), StructField("child", StringType, nullable = false),
+    StructField("depth", LongType, nullable = false), StructField("cnt", LongType, nullable = false)))
 
   def expand(docs: DataFrame, seeds: Seq[String], depth: Int = 2,
       fanout: Int = 5, stop: Seq[String] = TextAnalytics.Stopwords): DataFrame = {
@@ -29,7 +38,7 @@ object KeywordTree {
     import spark.implicits._
     var visited = seeds.map(_.toLowerCase).toSet
     var frontier = seeds.map(_.toLowerCase).distinct.sorted
-    var edges: Option[DataFrame] = None
+    val edges = Seq.newBuilder[(String, String, Long, Long)]
     for (d <- 1 to depth if frontier.nonEmpty) {
       val fr = frontier.toDF("parent")
       val blocked = (stop ++ visited).distinct
@@ -41,23 +50,20 @@ object KeywordTree {
         .filter(expr("size(array_except(split(child, ' '), split(parent, ' '))) > 0"))
         .groupBy("parent", "child").agg(count(lit(1)).as("cnt"))
       val w = Window.partitionBy("parent").orderBy(col("cnt").desc, col("child"))
+      // the level's ≤ fanout·|frontier| edges, collected ONCE: they are
+      // both the next frontier and this level's rows of the result
       val top = cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= fanout)
-        .select(col("parent"), col("child"), lit(d).cast("long").as("depth"), col("cnt"))
-      edges = Some(edges.map(_.unionByName(top)).getOrElse(top))
-      val children = top.select("child").distinct().as[String].collect().toSeq.sorted
+        .select(col("parent"), col("child"), lit(d.toLong).as("depth"), col("cnt"))
+        .as[(String, String, Long, Long)].collect()
+      edges ++= top
+      val children = top.map(_._2).distinct.sorted.toSeq
       frontier = children.filterNot(visited)
       visited ++= children
     }
-    edges match {
-      case Some(e) => e.orderBy(col("depth"), col("parent"), col("cnt").desc, col("child"))
-      case None => // empty seeds or depth < 1: empty result, not a crash
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("parent", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("child", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("depth", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("cnt", org.apache.spark.sql.types.LongType))))
-    }
+    // empty seeds or depth < 1: an empty result, not a crash
+    spark.createDataFrame(
+        java.util.Arrays.asList(edges.result().map(Row.fromTuple): _*), EdgeSchema)
+      .orderBy(col("depth"), col("parent"), col("cnt").desc, col("child"))
   }
 
   /** The user-visible artifact of the reference's --build-tree: the edge

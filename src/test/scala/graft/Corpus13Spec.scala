@@ -83,7 +83,7 @@ class Corpus13Spec extends AnyFunSuite with SparkSuite {
   }
 
   test("q269 iterative form: 2-round prefix equals the declarative unroll exactly") {
-    // the bpeTrainIterative discipline: the per-round-pinned iterative
+    // the per-round pin discipline: the per-round-pinned iterative
     // form must be BIT-EQUAL to q269's declarative 2-round unroll (all
     // arithmetic is int64 fixed-point, so equality is exact, not
     // tolerance-based), certifying the iterative path for real round

@@ -278,7 +278,8 @@ class Corpus2Spec extends AnyFunSuite with SparkSuite {
   }
 
   /** Textbook greedy BPE over a word-frequency table — the reference
-    * both the oracled q121 and the iterative trainer are held to. */
+    * both the oracled q121 and the 10-merge training are held to (ASCII
+    * only: it splits words by UTF-16 unit). */
   private def referenceBpe(words: Map[String, Long], rounds: Int)
       : (Map[String, Vector[String]], Seq[String]) = {
     var syms: Map[String, Vector[String]] =
@@ -322,23 +323,50 @@ class Corpus2Spec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("iterative BPE training (10 checkpointed rounds) matches the reference beyond the oracle depth") {
-    val (symsDf, merges) = operators.Corpus2.bpeTrainIterative(
-      Tables.documents(spark, sfDir), 10)
+  test("BPE trainer at 10 merges matches the reference; its first 3 merges are q121's") {
+    val rows = operators.Corpus2.bpeMerges(Tables.documents(spark, sfDir), 10).collect()
+    val merges = (1 to 10).map(r => rows.head.getAs[String](s"merge$r"))
     val (refSyms, refMerges) = referenceBpe(wordFreqs, 10)
     assert(merges == refMerges, s"merges $merges vs $refMerges")
     // the first three merges are exactly the oracled q121 sequence
     val q121 = SparkEntry.queries("q121_bpe_merges")(spark, sfDir)
       .select("merge1", "merge2", "merge3").as[(String, String, String)].head()
     assert(merges.take(3) == Seq(q121._1, q121._2, q121._3))
-    val got = symsDf.groupBy("word")
-      .agg(expr("array_join(transform(array_sort(collect_list(struct(pos, sym))), x -> x.sym), ' ')")
-        .as("syms"))
-      .as[(String, String)].collect().toMap
+    val got = rows.map(r => r.getAs[String]("word") -> r.getAs[String]("syms")).toMap
     assert(got.keySet == refSyms.keySet)
     got.foreach { case (w, s) =>
       assert(s == refSyms(w).mkString(" "), s"word $w after 10 merges")
     }
+  }
+
+  test("BPE edge cases: repeated-symbol merges, UTF-8 tie order, code-point split, no pairs") {
+    // U+FB00 (LATIN SMALL LIGATURE FF) sorts BEFORE U+1D49C (MATHEMATICAL
+    // SCRIPT CAPITAL A) in code-point / UTF-8 order but AFTER it in UTF-16
+    // order (0xFB00 > the 0xD835 high surrogate); `lower` keeps both
+    val ff = "\uFB00"
+    val sa = new String(Character.toChars(0x1D49C))
+    val docs = Seq((1L, s"aaaa ${ff}b ${ff}b"), (2L, s"${sa}b b$sa ${sa}b")).toDF("doc_id", "text")
+    // vocab aaaa:1, ﬀb:2, 𝒜b:2, b𝒜:1 — by hand:
+    //  1: a+a 3 (overlapping: aaaa holds it 3×) → aaaa = [aa, aa]
+    //  2: ﬀ+b 2 ties 𝒜+b 2; ﬀ < 𝒜 in UTF-8 order
+    //  3: 𝒜+b 2
+    //  4: aa+aa 1 ties b+𝒜 1; "aa" < "b"
+    val got = operators.Corpus2.bpeMerges(docs, 4)
+      .select("word", "freq", "syms", "merge1", "merge2", "merge3", "merge4")
+      .as[(String, Long, String, String, String, String, String)].collect().sortBy(_._1)
+    val merges = ("a+a", s"$ff+b", s"$sa+b", "aa+aa")
+    val expected = Seq(
+      ("aaaa", 1L, "aaaa"), (s"b$sa", 1L, s"b $sa"), (s"${ff}b", 2L, s"${ff}b"), (s"${sa}b", 2L, s"${sa}b"))
+      .map { case (w, f, s) => (w, f, s, merges._1, merges._2, merges._3, merges._4) }
+    assert(got.toSeq == expected.sortBy(_._1))
+    // b𝒜 splits into 2 code points, not 3 UTF-16 units: round 5 fuses
+    // them, and no 6th merge exists — fewer than `rounds` is empty
+    assert(operators.Corpus2.bpeMerges(docs, 5).select("merge5").as[String].collect()
+      .distinct.toSeq == Seq(s"b+$sa"))
+    assert(operators.Corpus2.bpeMerges(docs, 6).isEmpty)
+    // one-character words (𝒜 is one code point) hold no pair at all
+    val singles = Seq((1L, s"x $sa $ff x")).toDF("doc_id", "text")
+    assert(operators.Corpus2.bpeMerges(singles, 1).isEmpty)
   }
 
   test("q122 encoding is consistent with q121's symbolizations, word by word") {

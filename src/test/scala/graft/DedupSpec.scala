@@ -407,29 +407,54 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     assert(got.filter(_._5 == 3L).forall(_._3 < 0.5))
   }
 
+  /** Raw band-collision rows (a.doc_id < b.doc_id, one per shared
+    * bucket) of (doc_id, text) docs under a band-hash expression. */
+  private def bandCollisions(docs: org.apache.spark.sql.DataFrame, bandsExpr: String)
+      : Seq[(Long, Long)] = {
+    import org.apache.spark.sql.functions._
+    val t = docs
+      .select(col("doc_id"), expr(s"array_distinct(${operators.TextAnalytics.toksExpr})").as("w"))
+      .withColumn("sigs", graft.functions.MinHashSigs.minhashSigs(col("w"), 6))
+    val b = t.select(col("doc_id"), posexplode(expr(bandsExpr)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "h")
+    b.as("a").join(b.as("b"),
+        col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id"), col("b.doc_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+  }
+
   test("long band hash yields EXACTLY the md5 form's candidate pairs (r17 bucket-key audit)") {
     // bandsOfPinned switched to xxhash64 buckets (8-byte join keys); the
     // candidate set must equal the md5-string reference form on the
     // corpus — the q260/q261-style audit for the bucket keys. Equal
     // sig-pairs hash equal under both; a difference would mean an
     // unequal-input collision in one of them.
-    import org.apache.spark.sql.functions._
-    val t = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), expr(s"array_distinct(${operators.TextAnalytics.toksExpr})").as("w"))
-      .withColumn("sigs", graft.functions.MinHashSigs.minhashSigs(col("w"), 6))
-    def cand(bandsExpr: String): Set[(Long, Long)] = {
-      val b = t.select(col("doc_id"), posexplode(expr(bandsExpr)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "h")
-      b.as("a").join(b.as("b"),
-          col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id"), col("b.doc_id")).distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    val md5Set = cand(operators.Dedup.bandsExpr)
-    val longSet = cand(operators.Dedup.bandsLongExpr)
+    val docs = Tables.documents(spark, sfDir)
+    val md5Set = bandCollisions(docs, operators.Dedup.bandsExpr).toSet
+    val longSet = bandCollisions(docs, operators.Dedup.bandsLongExpr).toSet
     assert(md5Set.nonEmpty, "corpus produced no candidates — vacuous audit")
     assert(md5Set == longSet,
       s"bucket forms disagree: md5-only=${(md5Set -- longSet).take(5)} long-only=${(longSet -- md5Set).take(5)}")
+  }
+
+  test("empty and null-text documents never share an LSH bucket (both band-hash forms)") {
+    // 1,000 empty docs + 3 null-text docs + one real near-duplicate pair.
+    // An empty token set has NULL signatures; a band hash that skipped
+    // them would put every such doc in one bucket per band — ~1.5M
+    // collision rows here, n² in general. Both forms must yield only
+    // the near-dup pair, in at most one collision row per band.
+    val base = (1 to 30).map(i => s"tok$i")
+    val rows = (1L to 1000L).map(d => (d, "")) ++
+      (1001L to 1003L).map(d => (d, null: String)) ++
+      Seq((2001L, base.mkString(" ")), (2002L, (base.init :+ "other").mkString(" ")))
+    val docs = rows.toDF("doc_id", "text")
+    val md5Rows = bandCollisions(docs, operators.Dedup.bandsExpr)
+    val longRows = bandCollisions(docs, operators.Dedup.bandsLongExpr)
+    // compare sizes first: a failing set comparison would print ~500k pairs
+    val (md5Set, longSet) = (md5Rows.toSet, longRows.toSet)
+    assert(md5Set.size == 1 && md5Set.contains((2001L, 2002L)), s"md5 form: ${md5Set.take(5)}")
+    assert(longRows.size <= 3, s"${longRows.size} collision rows for 1 real pair over 3 bands")
+    assert(longSet == md5Set)
   }
 }
