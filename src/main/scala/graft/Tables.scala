@@ -68,24 +68,31 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame      = t(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame  = t(spark, dir, "lineitem")
-  /** `events.ts` is parquet TIMESTAMP(NANOS). Depending on the Spark build,
-    * that column surfaces either as raw nanos (legacy long mode, older
-    * readers) or natively as TIMESTAMP_NTZ (current 4.1.2 jars). Both paths
-    * floor-truncate to microseconds — the exact truncation DuckDB applies
-    * when it reads the same column, so event-time queries hash-match the
-    * oracle either way; the NTZ wall time is reinterpreted as a UTC instant
-    * (session timezone is pinned to UTC) to keep one TIMESTAMP type
-    * downstream.
-    */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  /** `events` with `ts` as one TIMESTAMP column — see [[eventsTs]]. */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    eventsTs(rawEvents(spark, dir))
+
+  /** `events` as the batch reader surfaces it. `events.ts` is parquet
+    * TIMESTAMP(NANOS); depending on the Spark build that column comes
+    * back either as raw nanos (legacy long mode, older readers) or
+    * natively as TIMESTAMP_NTZ (current 4.1.2 jars). The streaming
+    * reader probes this schema to pin its own. */
+  private[graft] def rawEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
+    t(spark, dir, "events")
+  }
+
+  /** Normalize either representation of `ts` (see [[rawEvents]]) to one
+    * TIMESTAMP column. Both paths floor-truncate to microseconds — the
+    * exact truncation DuckDB applies when it reads the same column, so
+    * event-time queries hash-match the oracle either way; the NTZ wall
+    * time is reinterpreted as a UTC instant (session timezone is pinned
+    * to UTC). Batch and streaming readers both call this. */
+  private[graft] def eventsTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
+    case org.apache.spark.sql.types.LongType =>
+      df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    case _ =>
+      df.withColumn("ts", col("ts").cast("timestamp"))
   }
   def documents(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "embeddings")

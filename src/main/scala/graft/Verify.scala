@@ -6,8 +6,8 @@ import java.nio.file.{Files, Paths}
   * (builder-side only; the driver passes two) select a subset of query
   * names for targeted re-dumps at expensive scale factors.
   *
-  * r15: dumps run CONCURRENTLY on a bounded pool (SPARK_GRAFT_DUMP_PAR,
-  * default = 2× the session's core count since r16 — see main() for the
+  * r15: dumps run CONCURRENTLY on a bounded pool (main uses 2× the
+  * session's core count since r16 — see main() for the
   * oversubscription measurement). The r14 driver artifact came back
   * empty with the engine provably green — the likely mechanism was the
   * sweep's wall-clock (~19 min sequential at 285 queries), and most of a
@@ -167,13 +167,12 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val spark = Session("spark.scheduler.mode" -> "FAIR")
-    // Default PAR = 2× cores (r16): most of a small-SF dump's cost is
+    // PAR = 2× cores (r16): most of a small-SF dump's cost is
     // single-threaded DRIVER work (analysis/optimize/codegen), which
     // oversubscribes well past the core count — measured warm at
     // CPUS=4 on sf0.01: PAR=4 247 s, PAR=8 103 s, PAR=12 121 s
     // (contention inflects past 2×).
-    run(spark, sfDir, outDir, only,
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_DUMP_PAR", (Session.cores * 2).toString).toInt))
+    run(spark, sfDir, outDir, only, Session.cores * 2)
     spark.stop()
     if (allFailed) sys.exit(3)
   }

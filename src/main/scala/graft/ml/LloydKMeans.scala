@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Folds.{orderedList, orderedSum}
 
 /** Deterministic fixed-iteration Lloyd k-means over the embedding column
   * — the ORACLE-ABLE form of the clustering step (reference analog:
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    assignment distances fold dims 0..63 left-to-right (matching
   *    DuckDB's list_sum over generate_series order, the proven q50
   *    pattern), and centroid means fold members in vec_id order
-  *    (`aggregate(array_sort(collect_list(...)))` ↔
+  *    ([[graft.operators.Folds.orderedSum]] ↔
   *    `list_sum(list(... ORDER BY vec_id))`). No rounding is needed
   *    anywhere inside the loop: both engines produce bit-identical
   *    doubles, so argmin assignment matches exactly.
@@ -58,8 +59,7 @@ object LloydKMeans {
   /** Collapse (cl, cent) rows into ONE broadcastable row whose `cc` is
     * the centroid list in cl order — assignment indexes into it. */
   private def asRow(cents: DataFrame): DataFrame =
-    cents.groupBy().agg(
-      expr("transform(array_sort(collect_list(struct(cl, cent))), s -> s.cent)").as("cc"))
+    cents.groupBy().agg(orderedList(col("cent"), col("cl")).as("cc"))
 
   /** Nearest-centroid assignment: a pure projection per corpus row
     * (dists to all k centroids, first-min index), no shuffle. */
@@ -78,10 +78,9 @@ object LloydKMeans {
       .select(col("cl"), col("vec_id"), posexplode(col("embedding")))
       .select(col("cl"), col("vec_id"), col("pos"), col("col").cast("double").as("v"))
       .groupBy("cl", "pos")
-      .agg((expr("aggregate(array_sort(collect_list(struct(vec_id, v))), 0D, (a, x) -> a + x.v)")
-        / count(lit(1))).as("cv"))
+      .agg((orderedSum(col("v"), col("vec_id")) / count(lit(1))).as("cv"))
       .groupBy("cl")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").as("cent"))
+      .agg(orderedList(col("cv"), col("pos")).as("cent"))
 
   /** doc/vec → cluster id after `lloydIters` full Lloyd rounds (each =
     * centroid rebuild + reassignment) on top of the seed assignment. */

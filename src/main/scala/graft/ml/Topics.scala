@@ -5,6 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Folds.orderedList
 
 /** M5: topic clustering (reference: BERTopic fit_transform,
   * scrappy.py:500-505). Contract preserved — doc → topic id, topic →
@@ -45,10 +46,9 @@ object Topics {
       .filter(!col("term").isInCollection(graft.operators.TextAnalytics.Stopwords))
     val counts = toks.groupBy("topic_id", "term").agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy("topic_id").orderBy(col("cnt").desc, col("term"))
-    // collect_list order is nondeterministic — sort by rank inside the agg.
     val top = counts.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
       .groupBy("topic_id")
-      .agg(expr("concat_ws(',', transform(array_sort(collect_list(struct(rn, term))), s -> s.term))").as("top_terms"))
+      .agg(concat_ws(",", orderedList(col("term"), col("rn"))).as("top_terms"))
     val sizes = assigned.groupBy("topic_id").agg(count(lit(1)).as("n_docs"))
     sizes.join(top, Seq("topic_id"), "left")
       .select(col("topic_id").cast("long"), col("n_docs"), col("top_terms"))

@@ -234,7 +234,7 @@ object Components {
             .join(deg, "src")
             .select(col("dst").as("id"), col("src"), (col("pr") / col("deg")).as("c"))
             .groupBy("id")
-            .agg(expr("aggregate(array_sort(collect_list(struct(src, c))), 0D, (a, x) -> a + x.c)").as("m"))
+            .agg(Folds.orderedSum(col("c"), col("src")).as("m"))
             .crossJoin(broadcast(nDf))
             .select(col("id"), (lit(0.15) / col("n") + lit(0.85) * col("m")).as("pr"))
         pr.select(col("id").as("doc_id"), round(col("pr"), 6).as("pr"))

@@ -582,26 +582,8 @@ object Corpus {
       col("l_quantity").cast("long").as("q"))
     val ph =
       "CAST(conv(substr(md5(concat('p#', CAST(l_partkey AS STRING))), 1, 15), 16, 10) AS BIGINT) + 1"
-    val rho = li.select(col("l_returnflag"), expr(ph).as("h"))
-      .withColumn("idx", col("h") % 256)
-      .withColumn("w", expr("h div 256"))
-      .withColumn("rho", when(col("w") === 0, lit(53))
-        .otherwise(lit(53) - length(expr("bin(w)"))))
-    val reg = rho.groupBy("l_returnflag", "idx").agg(max("rho").as("mx"))
-    val spine = reg.select("l_returnflag").distinct()
-      .select(col("l_returnflag"), explode(expr("sequence(0, 255)")).as("idx"))
-    val full = spine.join(reg, Seq("l_returnflag", "idx"), "left")
-      .withColumn("mx", coalesce(col("mx"), lit(0)))
-    val alpha = 0.7213 / (1 + 1.079 / 256.0)
-    val est = full.groupBy("l_returnflag").agg(
-      expr("aggregate(array_sort(collect_list(struct(idx, mx))), 0D, (a, x) -> a + pow(2D, -x.mx))").as("s"),
-      sum(when(col("mx") === 0, 1).otherwise(0)).as("v"))
-      .withColumn("e_raw", lit(alpha) * lit(65536.0) / col("s"))
-      .withColumn("est_raw",
-        when(col("e_raw") <= 2.5 * 256 && col("v") > 0,
-          lit(256.0) * log(lit(256.0) / col("v")))
-          .otherwise(col("e_raw")))
-      .select(col("l_returnflag"), round(col("est_raw"), 1).as("est_parts"))
+    val est = Corpus4.hllRegisters(li, Seq("l_returnflag"), expr(ph))
+      .groupBy("l_returnflag").agg(round(Corpus4.hllEstimate(col("mx")), 1).as("est_parts"))
     val exact = li.groupBy("l_returnflag")
       .agg(countDistinct("l_partkey").as("exact_parts"))
     val med = li.groupBy("l_returnflag", "q").agg(count(lit(1)).as("c"))

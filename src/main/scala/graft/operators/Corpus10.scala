@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import Folds.orderedSum
 import TextAnalytics.{toksExpr, toksDuck}
 
 /** Round-5 closers, part 6 — graph cohesion and corpus-statistics
@@ -184,13 +185,12 @@ object Corpus10 {
           .withColumn("rnk", row_number().over(Window.orderBy(desc("f"), col("w"))))
         val pts = top.select(col("rnk"),
           log(col("rnk").cast("double")).as("x"), log(col("f").cast("double")).as("y"))
-        def fold(t: String) =
-          s"""aggregate(array_sort(collect_list(named_struct('rnk', rnk, 't', $t))),
-             |CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.t)""".stripMargin.replace("\n", " ")
+        def fold(t: org.apache.spark.sql.Column) = orderedSum(t, col("rnk"))
+        val (x, y) = (col("x"), col("y"))
         pts.agg(count(lit(1)).cast("double").as("n"),
-            expr(fold("x")).as("sx"), expr(fold("y")).as("sy"),
-            expr(fold("x * x")).as("sxx"), expr(fold("x * y")).as("sxy"),
-            expr(fold("y * y")).as("syy"))
+            fold(x).as("sx"), fold(y).as("sy"),
+            fold(x * x).as("sxx"), fold(x * y).as("sxy"),
+            fold(y * y).as("syy"))
           .select(col("n").cast("long").as("n_terms"),
             round((col("n") * col("sxy") - col("sx") * col("sy")) /
               (col("n") * col("sxx") - col("sx") * col("sx")), 6).as("slope"),
@@ -335,8 +335,7 @@ object Corpus10 {
               log((col("c").cast("double") / col("ns")) /
                 (col("g").cast("double") / col("n")))).as("t"))
           .groupBy("source").agg(
-            round(expr("""aggregate(array_sort(collect_list(named_struct('w', w, 't', t))),
-                           CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.t)"""), 6).as("kl_nat"),
+            round(orderedSum(col("t"), col("w")), 6).as("kl_nat"),
             count(lit(1)).as("n_terms"))
           .orderBy("source")
       },
@@ -499,10 +498,8 @@ object Corpus10 {
         val tr = d.withColumn("dow", expr("weekday(day)"))
           .withColumn("trend", sum("v").over(w).cast("double") / count(lit(1)).over(w))
         val se = tr.groupBy("dow").agg(
-          expr("""aggregate(array_sort(collect_list(named_struct('day', day,
-                   't', CAST(v AS DOUBLE) - trend))),
-                   CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.t)""")
-            ./(count(lit(1))).as("seasonal"))
+          (orderedSum(col("v").cast("double") - col("trend"), col("day"))
+            / count(lit(1))).as("seasonal"))
         tr.join(broadcast(se), "dow")
           .select(col("day").cast("string").as("day"), col("v"),
             round(col("trend"), 4).as("trend"),
@@ -623,7 +620,7 @@ object Corpus10 {
         // KeywordTree-frontier discipline for driver-scale iterates —
         // and fold the rounds in Scala,
         // replicating the previous plan's summation orders EXACTLY
-        // (every Spark-side sum folded array_sort(collect_list(...)) in
+        // (every Spark-side sum was a Folds.orderedSum in
         // ascending key order; the Scala folds sort by the same keys,
         // and ASCII state names make String and UTF8String order
         // agree), so every double is bit-identical to the unrolled
@@ -672,9 +669,8 @@ object Corpus10 {
             val removal = math.max(0.0, 1.0 - pw / pcf)
             (c, pw, removal)
           }
-          // total removal summed in ascending channel order (the
-          // collect_list(struct(channel, x)) fold); channels is already
-          // ascending.
+          // total removal summed in ascending channel order (an
+          // orderedSum by channel); channels is already ascending.
           val trr = rows.foldLeft(0.0)((a, r) => a + r._3)
           rows.map { case (c, pw, removal) => (c, pcf, pw, removal) }
             .toDF("channel", "pcf", "p_without", "removal")
@@ -1124,9 +1120,8 @@ object Corpus10 {
           sum("nh").as("nn"), sum("sv").as("st"), sum("ss").as("sst"),
           count(lit(1)).as("k"),
           sum(col("nh") * col("nh")).as("sn2"),
-          expr("""aggregate(array_sort(collect_list(named_struct('source', source,
-                   'x', CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(nh AS DOUBLE)))),
-                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("sgg"))
+          orderedSum(col("sv").cast("double") * col("sv").cast("double") / col("nh").cast("double"),
+            col("source")).as("sgg"))
         .withColumn("ssb", col("sgg") - col("st").cast("double") * col("st") / col("nn"))
         .withColumn("ssw", col("sst").cast("double") - col("sgg"))
         .withColumn("msb", col("ssb") / (col("k") - 1))
@@ -1300,9 +1295,7 @@ object Corpus10 {
       val g = Tables.documents(s, dir)
         .groupBy(col("n_chars").as("v")).agg(count(lit(1)).as("n"))
       val m = g.agg(sum("n").as("nn"), sum(col("n") * col("v")).as("ss"),
-        expr("""aggregate(array_sort(collect_list(named_struct('v', v,
-                 'x', n * ln(CAST(v AS DOUBLE))))),
-                 CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.x)""").as("slog"))
+        orderedSum(expr("n * ln(CAST(v AS DOUBLE))"), col("v")).as("slog"))
       m.select(col("nn").as("n"),
         round(col("ss").cast("double") / col("nn"), 4).as("mean_chars"),
         round(exp(col("slog") / col("nn")), 4).as("geomean_chars"),
@@ -1356,9 +1349,7 @@ object Corpus10 {
           .groupBy("d", "wt").agg(count(col("m")).as("ov"))
         val nShared = j.agg(count(lit(1)).as("n_shared"))
         val ov20 = j.agg((count(lit(1)) / 20.0).as("overlap_at_20"))
-        ag.agg(expr(s"""round($oneMinusP * aggregate(
-                 array_sort(collect_list(named_struct('d', d, 'x', wt * ov / d))),
-                 CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x), 6)""").as("rbo"))
+        ag.agg(round(expr(oneMinusP) * orderedSum(expr("wt * ov / d"), col("d")), 6).as("rbo"))
           .select(lit(20L).as("depth"), col("rbo"))
           .crossJoin(broadcast(nShared)).crossJoin(broadcast(ov20))
           .select(col("depth"), col("rbo"), col("n_shared"),
@@ -1414,8 +1405,7 @@ object Corpus10 {
       val pe = ma.join(mb, Seq("a"), "full_outer")
         .select((coalesce(col("na"), lit(0L)) * coalesce(col("nb"), lit(0L))).as("prod"),
           col("a"))
-        .agg(expr("""aggregate(array_sort(collect_list(named_struct('a', a, 'x', CAST(prod AS DOUBLE)))),
-                     CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("pesum"))
+        .agg(orderedSum(col("prod").cast("double"), col("a")).as("pesum"))
       tot.crossJoin(broadcast(pe))
         .select(col("nn").as("n"), col("agree"),
           round(col("agree").cast("double") / col("nn"), 4).as("p_o"),
@@ -1467,9 +1457,7 @@ object Corpus10 {
       val ti = tot.agg(sum(col("t") * col("t") * col("t") - col("t")).as("ties"))
       val h = g.crossJoin(broadcast(nn)).crossJoin(broadcast(ti))
         .groupBy("n", "ties").agg(
-          expr("""aggregate(array_sort(collect_list(named_struct('lang', lang,
-                   'x', (r2j / 2.0D) * (r2j / 2.0D) / nj))),
-                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("sr"))
+          orderedSum(expr("(r2j / 2.0D) * (r2j / 2.0D) / nj"), col("lang")).as("sr"))
         .select(((lit(12.0) / (col("n").cast("double") * (col("n") + 1)) * col("sr") -
           lit(3.0) * (col("n") + 1)) /
           (lit(1.0) - col("ties").cast("double") /
@@ -1523,9 +1511,8 @@ object Corpus10 {
       val kk = rs.agg(count(lit(1)).as("k"), max("n").as("nb"))
       val stat = rs.crossJoin(broadcast(kk)).crossJoin(broadcast(qq))
         .groupBy("k", "nb", "sq2").agg(
-          expr("""aggregate(array_sort(collect_list(named_struct('t', t,
-                   'x', (r2j / 2.0D - nb * (k + 1) / 2.0D) * (r2j / 2.0D - nb * (k + 1) / 2.0D)))),
-                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("devsum"))
+          orderedSum(expr("(r2j / 2.0D - nb * (k + 1) / 2.0D) * (r2j / 2.0D - nb * (k + 1) / 2.0D)"),
+            col("t")).as("devsum"))
         .select(((col("k") - 1) * col("devsum") /
           (col("sq2") / 4.0 - col("nb") * col("k") * (col("k") + 1) * (col("k") + 1) / 4.0)).as("chi2"))
       rs.crossJoin(broadcast(stat))
@@ -1726,13 +1713,11 @@ object Corpus10 {
             col("coef")).otherwise(-col("coef")).as("t"),
           col("lvl"), col("pos"))
         .groupBy("i").agg(
-          expr("""aggregate(array_sort(collect_list(named_struct('lvl', lvl, 'pos', pos, 'x', t))),
-                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("sgn"))
+          orderedSum(col("t"), col("lvl"), col("pos")).as("sgn"))
       val rec = pad.join(cov, Seq("i"), "left").crossJoin(broadcast(a0))
         .select(col("i"), col("v"), (col("base") + coalesce(col("sgn"), lit(0.0))).as("vh"))
       val err = rec.agg(
-        expr("""aggregate(array_sort(collect_list(named_struct('i', i, 'x', (v - vh) * (v - vh)))),
-                 CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("l2"))
+        orderedSum((col("v") - col("vh")) * (col("v") - col("vh")), col("i")).as("l2"))
       topk.crossJoin(broadcast(err))
         .select(col("lvl"), col("pos"), round(col("coef"), 4).as("coef"),
           round(col("l2"), 4).as("recon_sse"))

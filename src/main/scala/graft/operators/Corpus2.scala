@@ -4,6 +4,8 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import Folds.{orderedList, orderedSum}
+
 /** Round-4 training-corpus operators — the selection/encoding half of the
   * pipeline that `Corpus` (gate → dedup → decontaminate → chunk) feeds:
   * vocabulary building + id encoding, token-budget selection, mixture
@@ -184,8 +186,7 @@ object Corpus2 {
         "left_anti")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),
-        expr("md5(array_join(transform(array_sort(collect_list(struct(pos, tok))), x -> x.tok), ' '))")
-          .as("clean_md5"))
+        md5(array_join(orderedList(col("tok"), col("pos")), " ")).as("clean_md5"))
     docs.select(col("doc_id"), size(expr(toksExpr)).cast("long").as("n_toks"))
       .join(kept, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_toks"),
@@ -273,8 +274,7 @@ object Corpus2 {
       .withColumn("lp", expr("ln((c_bi + 1.0D) / (c_ctx + CAST(v AS DOUBLE)))"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bi"),
-        expr("aggregate(array_sort(collect_list(struct(pos, lp))), 0D, (a, x) -> a + x.lp)")
-          .as("s"))
+        orderedSum(col("lp"), col("pos")).as("s"))
       .select(col("doc_id"), col("n_bi"), expr("round(-s / n_bi, 4)").as("ce"))
   }
 
@@ -304,8 +304,7 @@ object Corpus2 {
     tok.join(broadcast(wgt), "b")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_toks"),
-        expr("aggregate(array_sort(collect_list(struct(pos, wgt))), 0D, (a, x) -> a + x.wgt)")
-          .as("s"))
+        orderedSum(col("wgt"), col("pos")).as("s"))
       .select(col("doc_id"), col("n_toks"), expr("round(s / n_toks, 4)").as("llr"))
   }
 
@@ -378,7 +377,7 @@ object Corpus2 {
           .withColumn("id", coalesce(col("id"), lit(-1L)))
           .groupBy("doc_id")
           .agg(
-            expr("array_join(transform(array_sort(collect_list(struct(pos, id))), x -> CAST(x.id AS STRING)), ' ')")
+            array_join(transform(orderedList(col("id"), col("pos")), _.cast("string")), " ")
               .as("ids"),
             sum(when(col("id") === -1L, 1L).otherwise(0L)).as("n_oov"),
             count(lit(1)).as("n_toks"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -62,6 +62,50 @@ object Corpus4 {
     "CAST(conv(substr(md5(concat('u#', CAST(user_id AS STRING))), 1, 15), 16, 10) AS BIGINT) + 1"
   private def uhDuck =
     s"${Corpus.hexFoldDuck("substr(md5(concat('u#', CAST(user_id AS VARCHAR))), 1, 15)", 15)} + 1"
+
+  /** HyperLogLog (Flajolet et al. 2007) over a 60-bit hash h: m = 256
+    * registers, register index h % m, rank = leading zeros of the 52-bit
+    * window w = h div m plus one, computed as HllRankBits − bitLength(w)
+    * (HllRankBits when w = 0), and the bias constant α_m. Shared by the
+    * Spark sketches (q92, q168, q172) and the keyed-state twin
+    * `StatefulOps.hllStream`, so the two forms cannot drift. */
+  private[graft] val HllM = 256
+  private[graft] val HllRankBits = 53
+  private[graft] val HllAlpha = 0.7213 / (1 + 1.079 / 256.0)
+
+  /** The dense HLL register table of `rows` per `keys` group: one row
+    * per (keys…, idx) for idx in 0 until m, `mx` = the largest rank of
+    * the group's hashes `h` in that register (0 when none). Registers
+    * merge by max, so the table needs no pre-distinct and does not
+    * depend on how the input is partitioned. Rank is computed with
+    * integer and string ops only (bin() drops leading zeros on both
+    * engines — no float log). */
+  private[graft] def hllRegisters(rows: DataFrame, keys: Seq[String], h: Column): DataFrame = {
+    val k = keys.map(col)
+    val rho = rows.select(k :+ h.as("h"): _*)
+      .withColumn("idx", (col("h") % HllM).cast("int"))
+      .withColumn("w", expr(s"h div $HllM"))
+      .withColumn("rho", when(col("w") === 0, lit(HllRankBits))
+        .otherwise(lit(HllRankBits) - length(expr("bin(w)"))))
+    val reg = rho.groupBy(k :+ col("idx"): _*).agg(max("rho").as("mx"))
+    val spine = reg.select(k: _*).distinct()
+      .select(k :+ explode(expr(s"sequence(0, ${HllM - 1})")).as("idx"): _*)
+    spine.join(reg, keys :+ "idx", "left")
+      .withColumn("mx", coalesce(col("mx"), lit(0)))
+  }
+
+  /** The HLL estimate of one group of [[hllRegisters]] rows, as an
+    * aggregate expression over register column `mx` (and the table's
+    * `idx`): E = α·m² / Σ 2^−mx, the harmonic sum folded in idx order;
+    * when E ≤ 2.5·m and V registers are empty, the small-range
+    * linear-counting value m·ln(m/V) instead. */
+  private[graft] def hllEstimate(mx: Column): Column = {
+    val raw = lit(HllAlpha) * lit(HllM.toDouble * HllM) /
+      Folds.orderedSum(pow(lit(2.0), -mx), col("idx"))
+    val empty = sum(when(mx === 0, 1).otherwise(0))
+    when(raw <= 2.5 * HllM && empty > 0, lit(HllM.toDouble) * log(lit(HllM.toDouble) / empty))
+      .otherwise(raw)
+  }
 
   private[graft] val BLOOM_KH = 3
   /** Narrow = deliberately under-sized (the measured-collision regime at
@@ -599,17 +643,12 @@ object Corpus4 {
       // ORACLED HYPERLOGLOG (Flajolet et al. 2007) — the sketch q92
       // could only rows-check (engine-native HLLs differ by
       // construction): built here from first principles on the shared
-      // 60-bit user hash so both engines produce IDENTICAL registers.
-      // Register index = h % 256 (m=256, p=8); rank = leading zeros of
-      // the remaining 52-bit window + 1, computed with INTEGER/string
-      // ops only (53 − length(bin(w)), bin() drops leading zeros on
-      // both engines — no float log). Registers merge by MAX, so the
-      // sketch needs no pre-distinct and shards merge losslessly — the
-      // same monoid argument as q145/q153. The harmonic sum folds the
-      // 256 registers in index order (q114 discipline) and the
-      // small-range linear-counting correction (E ≤ 2.5m with empty
-      // registers) reuses q148's -not- formula ln(m/V) — both engines'
-      // ln agreed there. Output mirrors q153's honesty table: estimate
+      // 60-bit user hash so both engines produce IDENTICAL registers
+      // (hllRegisters: m=256, integer-only rank, MAX merge — the same
+      // monoid argument as q145/q153). hllEstimate folds the 256
+      // registers in index order (q114 discipline); its small-range
+      // linear-counting correction reuses q148's formula ln(m/V) — both
+      // engines' ln agreed there. Output mirrors q153's honesty table: estimate
       // vs exact NDV with err_ratio per scope. Scale: state is 256
       // bytes per scope FOREVER; one (scope, idx) max-aggregate, one
       // 256-row fold — no distinct, no rank, no corpus-sized anything.
@@ -617,26 +656,8 @@ object Corpus4 {
         val ev = Tables.events(s, dir)
         val scoped = ev.select(lit("all").as("scope"), col("user_id"))
           .unionByName(ev.select(col("event_type").as("scope"), col("user_id")))
-        val rho = scoped.select(col("scope"), expr(uhSpark).as("h"))
-          .withColumn("idx", col("h") % 256)
-          .withColumn("w", expr("h div 256"))
-          .withColumn("rho",
-            when(col("w") === 0, lit(53))
-              .otherwise(lit(53) - length(expr("bin(w)"))))
-        val reg = rho.groupBy("scope", "idx").agg(max("rho").as("mx"))
-        val spine = reg.select("scope").distinct()
-          .select(col("scope"), explode(expr("sequence(0, 255)")).as("idx"))
-        val full = spine.join(reg, Seq("scope", "idx"), "left")
-          .withColumn("mx", coalesce(col("mx"), lit(0)))
-        val alpha = 0.7213 / (1 + 1.079 / 256.0)
-        val est = full.groupBy("scope").agg(
-          expr("aggregate(array_sort(collect_list(struct(idx, mx))), 0D, (a, x) -> a + pow(2D, -x.mx))").as("s"),
-          sum(when(col("mx") === 0, 1).otherwise(0)).as("v"))
-          .withColumn("e_raw", lit(alpha) * lit(65536.0) / col("s"))
-          .withColumn("est_raw",
-            when(col("e_raw") <= 2.5 * 256 && col("v") > 0,
-              lit(256.0) * log(lit(256.0) / col("v")))
-              .otherwise(col("e_raw")))
+        val est = hllRegisters(scoped, Seq("scope"), expr(uhSpark))
+          .groupBy("scope").agg(hllEstimate(col("mx")).as("est_raw"))
         val exact = scoped.groupBy("scope")
           .agg(countDistinct("user_id").as("exact_ndv"))
         est.join(exact, "scope")
@@ -688,34 +709,15 @@ object Corpus4 {
       // build), both single hash aggregates.
       (s, dir) => {
         val ev = Tables.events(s, dir)
-        val rho = ev.select(col("event_type").as("etype"),
-          to_date(col("ts")).as("d"), expr(uhSpark).as("h"))
-          .withColumn("idx", (col("h") % 256).cast("int"))
-          .withColumn("w", expr("h div 256"))
-          .withColumn("rho",
-            when(col("w") === 0, lit(53))
-              .otherwise(lit(53) - length(expr("bin(w)"))))
-        val reg = rho.groupBy("etype", "d", "idx").agg(max("rho").as("mx"))
-        val days = reg.select("etype", "d").distinct()
-        val spine = days.select(col("etype"), col("d"),
-          explode(expr("sequence(0, 255)")).as("idx"))
-        val full = spine.join(reg, Seq("etype", "d", "idx"), "left")
-          .withColumn("mx", coalesce(col("mx"), lit(0)))
+        val rows = ev.select(col("event_type").as("etype"), to_date(col("ts")).as("d"), col("user_id"))
+        val full = hllRegisters(rows, Seq("etype", "d"), expr(uhSpark))
+        val days = rows.select("etype", "d").distinct()
         val wcum = Window.partitionBy("etype", "idx").orderBy("d")
           .rowsBetween(Window.unboundedPreceding, 0)
         val cum = full.withColumn("cmx", max("mx").over(wcum))
-        val alpha = 0.7213 / (1 + 1.079 / 256.0)
-        def estExpr(s: String, v: String) =
-          when(lit(alpha) * lit(65536.0) / col(s) <= 2.5 * 256 && col(v) > 0,
-            lit(256.0) * log(lit(256.0) / col(v)))
-            .otherwise(lit(alpha) * lit(65536.0) / col(s))
         val per = cum.groupBy("etype", "d").agg(
-          expr("aggregate(array_sort(collect_list(struct(idx, mx))), 0D, (a, x) -> a + pow(2D, -x.mx))").as("s_day"),
-          sum(when(col("mx") === 0, 1).otherwise(0)).as("v_day"),
-          expr("aggregate(array_sort(collect_list(struct(idx, cmx))), 0D, (a, x) -> a + pow(2D, -x.cmx))").as("s_cum"),
-          sum(when(col("cmx") === 0, 1).otherwise(0)).as("v_cum"))
-          .withColumn("est_day", round(estExpr("s_day", "v_day"), 1))
-          .withColumn("est_cum", round(estExpr("s_cum", "v_cum"), 1))
+          round(hllEstimate(col("mx")), 1).as("est_day"),
+          round(hllEstimate(col("cmx")), 1).as("est_cum"))
         val fd = ev.select(col("event_type").as("etype"), col("user_id"),
           to_date(col("ts")).as("d"))
           .groupBy("etype", "user_id").agg(min("d").as("fd"))

@@ -398,9 +398,8 @@ object Corpus5 {
         daily.crossJoin(broadcast(mx))
           .withColumn("age", datediff(col("dmax"), col("d")))
           .groupBy("etype").agg(
-            expr("""round(aggregate(array_sort(collect_list(struct(d, age, vol_c))), 0D,
-              |(a, x) -> a + pow(0.9D, x.age) * x.vol_c) / 100.0, 4)"""
-              .stripMargin.replace("\n", " ")).as("decayed"),
+            round(Folds.orderedSum(pow(lit(0.9), col("age")) * col("vol_c"), col("d"), col("age"))
+              / lit(100.0), 4).as("decayed"),
             round(sum("vol_c") / lit(100.0), 4).as("total"),
             count(lit(1)).as("n_days"))
           .withColumn("freshness", round(col("decayed") / col("total"), 6))
@@ -459,7 +458,7 @@ object Corpus5 {
           sum(col("w") * col("post_c")).as("wx"), sum("w").as("wsum"))
           .withColumn("rmean", col("wx") / col("wsum") / 100.0)
         rm.groupBy("arm").agg(
-          expr("array_sort(transform(array_sort(collect_list(struct(r, rmean))), s -> s.rmean))").as("ms"))
+          array_sort(Folds.orderedList(col("rmean"), col("r"))).as("ms"))
           .select(col("arm"),
             round(expr("aggregate(ms, 0D, (a, x) -> a + x) / 32.0D"), 4).as("boot_mean"),
             round(expr("ms[1]"), 4).as("ci_lo"),

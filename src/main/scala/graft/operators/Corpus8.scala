@@ -131,18 +131,18 @@ object Corpus8 {
     * building block of `Flows.integrityAuditFlow`, which compares two
     * snapshots' trees to localize tampering. */
   def merkle(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    def fold(c: String) = s"md5(array_join(transform(array_sort(collect_list(struct($c, hh))), x -> x.hh), ''))"
+    def fold(c: String) = md5(array_join(Folds.orderedList(col("hh"), col(c)), ""))
     val h = docs
       .select(col("doc_id"), md5(col("text")).as("hh"),
         expr("doc_id div 64").as("page"))
     val pages = h.groupBy("page")
-      .agg(count(lit(1)).as("n_docs"), expr(fold("doc_id")).as("hh"))
+      .agg(count(lit(1)).as("n_docs"), fold("doc_id").as("hh"))
       .withColumn("shard", pmod(col("page"), lit(8L)))
     val shards = pages.groupBy("shard")
-      .agg(sum("n_docs").as("n_docs"), expr(fold("page")).as("hh"))
+      .agg(sum("n_docs").as("n_docs"), fold("page").as("hh"))
     val root = shards
       .select(col("shard").as("page"), col("n_docs"), col("hh"))
-      .agg(sum("n_docs").as("n_docs"), expr(fold("page")).as("hh"))
+      .agg(sum("n_docs").as("n_docs"), fold("page").as("hh"))
     pages.select(lit("page").as("level"), col("page").as("node"), col("n_docs"), col("hh").as("digest"))
       .unionByName(shards.select(lit("shard").as("level"), col("shard").as("node"), col("n_docs"), col("hh").as("digest")))
       .unionByName(root.select(lit("root").as("level"), lit(-1L).as("node"), col("n_docs"), col("hh").as("digest")))
@@ -421,9 +421,8 @@ object Corpus8 {
           .groupBy("user_id", "d").agg(sum("w").as("dv"))
         daily.groupBy("user_id")
           .agg(count(lit(1)).as("n_days"), sum("dv").as("delta_sum"),
-            expr("""aggregate(transform(array_sort(collect_list(struct(d, dv))), x -> x.dv),
-                  |0L, (a, b) -> greatest(0L, least(50L, a + b)))"""
-              .stripMargin.replace("\n", " ")).as("final_bal"))
+            aggregate(Folds.orderedList(col("dv"), col("d")), lit(0L),
+              (a, b) => greatest(lit(0L), least(lit(50L), a + b))).as("final_bal"))
           .orderBy("user_id")
       },
       Some("""WITH delta AS (SELECT user_id, CAST(ts AS DATE) AS d,

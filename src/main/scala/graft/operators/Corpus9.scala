@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import Folds.orderedSum
 import TextAnalytics.{toksExpr, toksDuck, stopSqlList}
 
 /** Round-5 closers, part 5 — the comparative-statistics tranche: the
@@ -68,11 +69,8 @@ object Corpus9 {
         val tot = g.agg(
           sum("n").as("nn"), sum("sv").as("st"), sum("ss").as("sst"),
           count(lit(1)).as("k"),
-          expr("""aggregate(
-                   array_sort(collect_list(named_struct(
-                     'lang', lang,
-                     'term', CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)))),
-                   CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)""").as("sgg"))
+          orderedSum(col("sv").cast("double") * col("sv").cast("double") / col("n").cast("double"),
+            col("lang")).as("sgg"))
           .withColumn("ssb", col("sgg") - col("st").cast("double") * col("st").cast("double") / col("nn").cast("double"))
           .withColumn("sst_c", col("sst").cast("double") - col("st").cast("double") * col("st").cast("double") / col("nn").cast("double"))
         g.crossJoin(broadcast(tot.select("nn", "st", "k", "ssb", "sst_c")))
@@ -228,10 +226,7 @@ object Corpus9 {
             posexplode(expr("transform(ws, x -> x.w)")).as(Seq("wpos", "w")))
           .join(wstat, "w")
           .groupBy("doc_id", "isl", "phrase").agg(
-            expr("""aggregate(
-                     array_sort(collect_list(named_struct(
-                       'wpos', wpos, 'sc', CAST(deg AS DOUBLE) / freq))),
-                     CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.sc)""").as("score"))
+            orderedSum(col("deg").cast("double") / col("freq"), col("wpos")).as("score"))
         psc.groupBy("phrase").agg(
             count(lit(1)).as("occurrences"), max("score").as("score"))
           .select(col("phrase"), col("occurrences"), round(col("score"), 6).as("score"))
@@ -373,14 +368,10 @@ object Corpus9 {
             .join(broadcast(p.select(col("i").as("j"), col("p").as("pj"))), "j")
             .join(wins, "i")
             .groupBy("i", "w").agg(
-              expr("""aggregate(
-                       array_sort(collect_list(named_struct(
-                         'j', j, 't', CAST(nij AS DOUBLE) / (pi + pj)))),
-                       CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.t)""").as("den"))
+              orderedSum(col("nij").cast("double") / (col("pi") + col("pj")), col("j")).as("den"))
             .select(col("i"), (col("w").cast("double") / col("den")).as("p"))
           val nrm = it.agg(
-            expr("""aggregate(array_sort(collect_list(named_struct('i', i, 'p', p))),
-                     CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.p)""").as("sp"),
+            orderedSum(col("p"), col("i")).as("sp"),
             count(lit(1)).as("k"))
           it.crossJoin(broadcast(nrm))
             .select(col("i"), (col("p") / col("sp") * col("k")).as("p"))
@@ -634,8 +625,7 @@ object Corpus9 {
         val w = g.withColumn("nsh",
           sqrt((col("nh") * col("ss") - col("sv") * col("sv")).cast("double")))
         val tot = w.agg(
-          expr("""aggregate(array_sort(collect_list(named_struct('source', source, 'x', nsh))),
-                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("tot_nsh"),
+          orderedSum(col("nsh"), col("source")).as("tot_nsh"),
           sum("nh").as("n"))
         val alloc = w.crossJoin(broadcast(tot))
           .select(col("source"), col("nh"),
@@ -819,12 +809,9 @@ object Corpus9 {
         val tot = g.agg(
           sum("nh").as("nn"), sum("sv").as("st"), sum("ss").as("sst"),
           count(lit(1)).as("k"),
-          expr("""aggregate(array_sort(collect_list(named_struct('source', source,
-                   'x', CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(nh AS DOUBLE)))),
-                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("sgg"),
-          expr("""aggregate(array_sort(collect_list(named_struct('source', source,
-                   'x', 1.0D / CAST(nh AS DOUBLE)))),
-                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("sinv"))
+          orderedSum(col("sv").cast("double") * col("sv").cast("double") / col("nh").cast("double"),
+            col("source")).as("sgg"),
+          orderedSum(lit(1.0) / col("nh").cast("double"), col("source")).as("sinv"))
           .withColumn("gm", col("st").cast("double") / col("nn"))
           .withColumn("sw2",
             (col("sst").cast("double") - col("sgg")) / (col("nn") - col("k")))
@@ -832,9 +819,7 @@ object Corpus9 {
         val devs = g.crossJoin(broadcast(tot.select("gm")))
           .select(col("source"),
             (col("sv").cast("double") / col("nh") - col("gm")).as("dev"))
-          .agg(expr("""aggregate(array_sort(collect_list(named_struct('source', source,
-                        'x', dev * dev))),
-                        CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("ssb_m"))
+          .agg(orderedSum(col("dev") * col("dev"), col("source")).as("ssb_m"))
         g.crossJoin(broadcast(tot.select("gm", "sig2m", "k"))).crossJoin(broadcast(devs))
           .withColumn("c", greatest(lit(0.0),
             lit(1.0) - (col("k") - 3).cast("double") * col("sig2m") / col("ssb_m")))
@@ -888,11 +873,9 @@ object Corpus9 {
             (col("o").cast("double") - col("e")) * (col("o").cast("double") - col("e")) / col("e"))
         val perType = terms.groupBy("t").agg(
           sum("o").as("n_type"),
-          expr("""aggregate(array_sort(collect_list(named_struct('dow', dow, 'x', term))),
-                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("chi2_contrib"))
+          orderedSum(col("term"), col("dow")).as("chi2_contrib"))
         val chi2 = perType.agg(
-          expr("""aggregate(array_sort(collect_list(named_struct('t', t, 'x', chi2_contrib))),
-                   CAST(0.0 AS DOUBLE), (acc, v) -> acc + v.x)""").as("chi2"))
+          orderedSum(col("chi2_contrib"), col("t")).as("chi2"))
         perType.crossJoin(broadcast(chi2)).crossJoin(broadcast(tot))
           .select(col("t").as("event_type"), col("n_type"),
             round(col("chi2_contrib"), 6).as("chi2_contrib"),

@@ -85,11 +85,9 @@ object Dedup {
       .distinct()
   }
 
-  /** Inverted token index: (sh = (doc_id, s), sz = (doc_id, n)). */
-  private def invertedIndex(t: DataFrame): (DataFrame, DataFrame) = {
-    val sh = t.select(col("doc_id"), explode(col("w")).as("s"))
-    (sh, sh.groupBy("doc_id").agg(count(lit(1)).as("n")))
-  }
+  /** Inverted token index: one (doc_id, s) posting per token. */
+  private def invertedIndex(t: DataFrame): DataFrame =
+    t.select(col("doc_id"), explode(col("w")).as("s"))
 
   /** Lossless size-compatibility prefilter: J(A,B) ≥ j forces
     * min(|A|,|B|) ≥ j·max(|A|,|B|) (because |A∩B| ≤ min and
@@ -174,35 +172,16 @@ object Dedup {
     * instead of fanning out per token); the per-pair intersect is
     * O(|A|+|B|) in the map stage with no further shuffle.
     *
-    * `exact = false` (the LSH-family default) runs the intersection
-    * over interned fingerprints — as of r14 via the codegen'd
-    * [[graft.functions.InternTokens]] (sorted distinct md5-prefix64
-    * longs, no per-token hex strings) with the per-pair count from
-    * [[graft.functions.SortedLongIntersectCount]] (two-pointer merge
-    * walk — no per-pair OpenHashSet or materialized intersection
-    * array), value-identical to the r13 `size(array_intersect)` over
-    * [[internExpr]] (DedupSpec asserts both ≡ on the corpus; alloc
-    * telemetry drove the change — q137/q143 were the bench set's
-    * dominant allocators). q42's ground-truth contract
-    * passes `exact = true` to keep the verbatim string form — the
-    * exact/interned pair gives q260 its audit baseline. */
-  private def jaccardOfCandidates(
-      cand: DataFrame, t: DataFrame, minJ: Double,
-      exact: Boolean = false): DataFrame = {
+    * This is q42's ground-truth form: the intersection runs over the
+    * verbatim token strings — the exact/interned pair gives q260 its
+    * audit baseline. The LSH family verifies over interned fingerprints
+    * instead ([[internedJaccard]]). */
+  private def jaccardOfCandidates(cand: DataFrame, t: DataFrame, minJ: Double): DataFrame = {
     val sz = t.select(col("doc_id"), size(col("w")).cast("long").as("n"))
-    val pruned = if (minJ > 0.0) sizeCompatible(cand, sz, minJ) else cand
-    val sets =
-      if (exact) t.select(col("doc_id"), col("w"))
-      else t.select(col("doc_id"),
-        graft.functions.InternTokens.internTokens(col("w")).as("w"))
-    val iCol =
-      if (exact) size(array_intersect(col("wa"), col("wb"))).cast("long")
-      else graft.functions.SortedLongIntersectCount
-        .sortedIntersectCount(col("wa"), col("wb"))
-    pruned
-      .join(sets.select(col("doc_id").as("da"), col("w").as("wa")), "da")
-      .join(sets.select(col("doc_id").as("db"), col("w").as("wb")), "db")
-      .withColumn("i", iCol)
+    sizeCompatible(cand, sz, minJ)
+      .join(t.select(col("doc_id").as("da"), col("w").as("wa")), "da")
+      .join(t.select(col("doc_id").as("db"), col("w").as("wb")), "db")
+      .withColumn("i", size(array_intersect(col("wa"), col("wb"))).cast("long"))
       .select(col("da"), col("db"),
         round(col("i") * lit(1.0) /
           (size(col("wa")) + size(col("wb")) - col("i")), 4).as("jaccard"))
@@ -275,9 +254,13 @@ object Dedup {
     t.select(col("doc_id"), col("n"), posexplode(expr(bandsLongExpr)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "h")
 
-  /** Interned verify over a pinned LSH-state frame — the same
-    * expressions jaccardOfCandidates(…, exact = false) produces, with
-    * the sets read from the pin instead of re-derived per side. */
+  /** Interned verify over a pinned LSH-state frame (`iw` = the
+    * [[graft.functions.InternTokens]] set: sorted distinct md5-prefix64
+    * longs): the per-pair count comes from
+    * [[graft.functions.SortedLongIntersectCount]] (two-pointer merge
+    * walk — no per-pair OpenHashSet or materialized intersection
+    * array), value-identical to `size(array_intersect)` over
+    * [[internExpr]] (DedupSpec asserts both ≡ on the corpus). */
   private def internedJaccard(cand: DataFrame, t: DataFrame): DataFrame =
     cand
       .join(t.select(col("doc_id").as("da"), col("iw").as("wa")), "da")
@@ -384,16 +367,8 @@ object Dedup {
     val touched = sPin.join(
       cand.select(col("db").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
     val verifySet = touched.unionByName(bPin)
-    // the same lossless size prune jaccardOfCandidates(…, minJ = 0.9)
-    // applied, reading the pinned sizes
-    val sz = verifySet.select(col("doc_id"), col("n"))
-    val pruned = cand
-      .join(broadcast(sz.select(col("doc_id").as("da"), col("n").as("na"))), "da")
-      .join(broadcast(sz.select(col("doc_id").as("db"), col("n").as("nb"))), "db")
-      .filter(least(col("na"), col("nb")) >=
-        (lit(0.9) - lit(0.001)) * greatest(col("na"), col("nb")))
-      .select(col("da"), col("db"))
-    val dup = internedJaccard(pruned, verifySet)
+    // lossless size prune over the pinned sizes
+    val dup = internedJaccard(sizeCompatible(cand, verifySet, 0.9), verifySet)
       .filter(col("jaccard") >= 0.9)
       .groupBy("da").agg(min("db").as("dup_of"))
     batch.select(col("doc_id"))
@@ -534,22 +509,9 @@ object Dedup {
         // is ~1.5s SLOWER here at sf0.1 — on this corpus nearly every rep
         // pairs with an anchor, so the prune keeps ~all tokens. q64 keeps
         // the prune because its store/batch asymmetry makes it pay.)
-        // Inline jaccardOfCandidates over the pinned interned sets —
-        // same lossless size prune (sizes are the string-set sizes, as
-        // before), same SortedLongIntersectCount verify, same rounded
-        // jaccard over the interned array sizes.
-        val dropped = cand
-          .join(broadcast(r.select(col("doc_id").as("da"), col("n").as("na"))), "da")
-          .join(broadcast(r.select(col("doc_id").as("db"), col("n").as("nb"))), "db")
-          .filter(least(col("na"), col("nb")) >=
-            (lit(0.9) - lit(0.001)) * greatest(col("na"), col("nb")))
-          .join(r.select(col("doc_id").as("da"), col("iw").as("wa")), "da")
-          .join(r.select(col("doc_id").as("db"), col("iw").as("wb")), "db")
-          .withColumn("i", graft.functions.SortedLongIntersectCount
-            .sortedIntersectCount(col("wa"), col("wb")))
-          .select(col("da"), col("db"),
-            round(col("i") * lit(1.0) /
-              (size(col("wa")) + size(col("wb")) - col("i")), 4).as("jaccard"))
+        // Lossless size prune over the string-set sizes, then the
+        // interned verify over the pinned sets.
+        val dropped = internedJaccard(sizeCompatible(cand, r, 0.9), r)
           .filter(col("jaccard") >= 0.9)
           .select(col("da").as("doc_id")).distinct()
         r.join(dropped, Seq("doc_id"), "left_anti")
@@ -600,12 +562,12 @@ object Dedup {
         val pref = t
           .withColumn("p", (ceil(size(col("w")) * lit(0.1)) + lit(1)).cast("int"))
           .select(col("doc_id"), explode(expr("slice(array_sort(w), 1, p)")).as("s"))
-        val (sh, _) = invertedIndex(t)
+        val sh = invertedIndex(t)
         val cand = pref.as("pa")
           .join(sh.as("fb"), col("pa.s") === col("fb.s") && col("pa.doc_id") < col("fb.doc_id"))
           .select(col("pa.doc_id").as("da"), col("fb.doc_id").as("db"))
           .distinct()
-        jaccardOfCandidates(cand, t, minJ = 0.9, exact = true)
+        jaccardOfCandidates(cand, t, minJ = 0.9)
           .filter(col("jaccard") >= 0.9)
           .orderBy("da", "db")
       },

@@ -232,8 +232,7 @@ object EventWindows {
             Window.partitionBy("user_id", "sess").orderBy(col("ts"), col("event_id"))))
           .filter(col("rn") <= 3)
           .groupBy("user_id", "sess")
-          .agg(expr("array_join(transform(array_sort(collect_list(struct(rn, event_type))), x -> x.event_type), '>')")
-            .as("path"))
+          .agg(array_join(Folds.orderedList(col("event_type"), col("rn")), ">").as("path"))
           .groupBy("path").agg(count(lit(1)).as("n_sessions"))
           .orderBy(col("n_sessions").desc, col("path")).limit(20)
       },

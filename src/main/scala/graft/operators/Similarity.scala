@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import Folds.{orderedList, orderedSum}
+
 /** North-star similarity search over the `embeddings` table
   * (reference analog: SentenceTransformer encode + BERTopic neighborhoods,
   * scrappy.py:498-501 — here the embedding *column* operators).
@@ -882,10 +884,9 @@ object Similarity {
               .stripMargin.replace("\n", " "))).as("x"))
           .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
         def asRow(perM: DataFrame): DataFrame =
-          perM.groupBy().agg(expr(
-            "transform(array_sort(collect_list(struct(m, cents))), s -> s.cents)").as("ccm"))
+          perM.groupBy().agg(orderedList(col("cents"), col("m")).as("ccm"))
         val init = asRow(sub.filter(col("vec_id") < 4).groupBy("m")
-          .agg(expr("transform(array_sort(collect_list(struct(vec_id, sv))), s -> s.sv)").as("cents")))
+          .agg(orderedList(col("sv"), col("vec_id")).as("cents")))
         def assignTo(row: DataFrame): DataFrame =
           sub.crossJoin(broadcast(row))
             .withColumn("dists", expr(
@@ -898,18 +899,16 @@ object Similarity {
           assigned
             .select(col("m"), col("c"), col("vec_id"), posexplode(col("sv")))
             .groupBy("m", "c", "pos")
-            .agg((expr("aggregate(array_sort(collect_list(struct(vec_id, col))), 0D, (a, x) -> a + x.col)")
-              / count(lit(1))).as("cv"))
+            .agg((orderedSum(col("col"), col("vec_id")) / count(lit(1))).as("cv"))
             .groupBy("m", "c")
-            .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").as("cent"))
+            .agg(orderedList(col("cv"), col("pos")).as("cent"))
             .groupBy("m")
-            .agg(expr("transform(array_sort(collect_list(struct(c, cent))), s -> s.cent)").as("cents")))
+            .agg(orderedList(col("cent"), col("c")).as("cents")))
         var assigned = assignTo(init)
         for (_ <- 1 to 2) assigned = assignTo(recompute(assigned))
         assigned.groupBy("vec_id").agg(
-          expr("array_join(transform(array_sort(collect_list(struct(m, c))), s -> CAST(s.c AS STRING)), '')").as("codes_str"),
-          (expr("aggregate(array_sort(collect_list(struct(m, md))), 0D, (a, x) -> a + x.md)")
-            / lit(64.0)).as("mse"))
+          array_join(transform(orderedList(col("c"), col("m")), _.cast("string")), "").as("codes_str"),
+          (orderedSum(col("md"), col("m")) / lit(64.0)).as("mse"))
           .select(col("vec_id"), col("codes_str"),
             round(col("mse") * lit(1e6), 4).as("mse_e6"))
           .orderBy("vec_id")

@@ -142,8 +142,7 @@ object TextAnalytics {
         """ln((n - df + 0.5D) / (df + 0.5D) + 1.0D) * tf * 2.2D /
           |(tf + 1.2D * (0.25D + 0.75D * dl / avgdl))""".stripMargin.replace("\n", " ")))
       .groupBy("doc_id")
-      .agg(expr("round(aggregate(array_sort(collect_list(struct(term, sc))), 0D, (a, x) -> a + x.sc), 4)")
-        .as("bm25"))
+      .agg(round(Folds.orderedSum(col("sc"), col("term")), 4).as("bm25"))
   }
 
   /** The DuckDB CTE chain matching [[bm25Scores]]; splice after WITH.
@@ -292,10 +291,9 @@ object TextAnalytics {
       // gets the standard tf-saturated, length-normalized relevance
       // score. Shape at 100 TB: one explode→groupBy for tf (only QUERY
       // terms survive the filter, so the shuffle is tiny), df and corpus
-      // stats broadcast as scalars. Per-doc term scores are summed via a
-      // SORTED fold (array_sort before aggregate) because double
-      // addition is order-sensitive and collect_list order is not
-      // deterministic — the oracle folds in the same term order.
+      // stats broadcast as scalars. Per-doc term scores are summed with
+      // Folds.orderedSum in term order because double addition is
+      // order-sensitive — the oracle folds in the same term order.
       (s, dir) =>
         bm25Scores(Tables.documents(s, dir), Seq("scan", "join", "filter"))
           .orderBy(col("bm25").desc, col("doc_id")),
@@ -565,12 +563,9 @@ object TextAnalytics {
           .withColumn("rank", row_number().over(
             org.apache.spark.sql.expressions.Window.orderBy(col("rel").desc, col("doc_id"))).cast("long"))
           .withColumn("contrib", expr("rel / log2(rank + 1.0D)"))
-        val dcg = ranked.agg(expr(
-          "round(aggregate(array_sort(collect_list(struct(rank, contrib))), 0D, (a, x) -> a + x.contrib), 6)")
-          .as("dcg"))
-        val idcg = ideal.agg(expr(
-          "round(aggregate(array_sort(collect_list(struct(rank, contrib))), 0D, (a, x) -> a + x.contrib), 6)")
-          .as("idcg"))
+        val gain = round(Folds.orderedSum(col("contrib"), col("rank")), 6)
+        val dcg = ranked.agg(gain.as("dcg"))
+        val idcg = ideal.agg(gain.as("idcg"))
         dcg.crossJoin(idcg)
           .select(col("dcg"), col("idcg"),
             round(col("dcg") / col("idcg"), 6).as("ndcg"))

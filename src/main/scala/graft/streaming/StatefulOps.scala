@@ -203,12 +203,12 @@ object StatefulOps {
     * against q168's published row). Unlike the KMV state there is no
     * trimming to reason about: state is 256 small ints per scope
     * FOREVER, and duplicates are absorbed for free (no distinct
-    * anywhere). The rank constant 53 is tied to q168's split of the
-    * shared 60-bit hash (8 index bits, 52-bit rank window) — the two
-    * twins must never drift, so both hardcode it. */
+    * anywhere). m, the rank constant and α are the constants of
+    * [[graft.operators.Corpus4.hllRegisters]], so the twins cannot
+    * drift; the fold stays in Scala because it runs in keyed state. */
   def hllStream(hashes: Dataset[KmvHash]): Dataset[HllSketch] = {
     import hashes.sparkSession.implicits._
-    val m = 256
+    import graft.operators.Corpus4.{HllAlpha, HllM => m, HllRankBits}
     hashes.groupByKey(_.scope)
       .flatMapGroupsWithState[(Seq[Int], Long), HllSketch](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -220,18 +220,18 @@ object StatefulOps {
           rows.foreach { r =>
             val idx = (r.h % m).toInt
             val w = r.h / m
-            val rho = if (w == 0) 53 else 53 - java.lang.Long.toBinaryString(w).length
+            val rho =
+              if (w == 0) HllRankBits else HllRankBits - java.lang.Long.toBinaryString(w).length
             if (rho > reg(idx)) reg(idx) = rho
             n += 1
           }
           state.update((reg.toSeq, n))
           val s = reg.foldLeft(0.0)((a, x) => a + math.pow(2.0, -x))
           val v = reg.count(_ == 0)
-          // operation order mirrors q168's exactly (alpha · m² precomputed,
-          // then / s) so the twins agree to the last bit, not just the round
-          val alpha = 0.7213 / (1 + 1.079 / 256.0)
-          val eRaw = alpha * 65536.0 / s
-          val est = if (eRaw <= 2.5 * m && v > 0) 256.0 * math.log(256.0 / v) else eRaw
+          // operation order mirrors Corpus4.hllEstimate exactly (α · m²
+          // first, then / s) so the twins agree to the last bit
+          val eRaw = HllAlpha * (m.toDouble * m) / s
+          val est = if (eRaw <= 2.5 * m && v > 0) m * math.log(m.toDouble / v) else eRaw
           Iterator(HllSketch(scope, n, m - v, est))
       }
   }

@@ -101,24 +101,16 @@ object StreamingTwin {
   private val stagedDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
-  /** `events.ts` is parquet TIMESTAMP(NANOS); which type the reader
-    * surfaces depends on the Spark build (raw nanos long under the legacy
-    * conf on older readers, native TIMESTAMP_NTZ on current 4.1.2 jars).
-    * Probe the batch reader once per source dir and pin the streaming
-    * schema to the same type, mirroring Tables.events. */
+  /** The stream schema of `events`, with `ts` pinned to the type the
+    * batch reader surfaces on this build ([[graft.Tables.rawEvents]]). */
   def eventReadSchema(spark: SparkSession, dir: String): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val tsType = graft.Tables.rawEvents(spark, dir).schema("ts").dataType
     StructType(eventSchema.fields.map(f =>
       if (f.name == "ts") StructField("ts", tsType) else f))
   }
 
-  /** Normalize the probed ts representation to one TIMESTAMP column
-    * (micros, UTC instant) — the exact truncation DuckDB applies. */
-  def fixTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
-    case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    case _        => df.withColumn("ts", col("ts").cast("timestamp"))
-  }
+  /** The batch normalization of the probed `ts` ([[graft.Tables.eventsTs]]). */
+  def fixTs(df: DataFrame): DataFrame = graft.Tables.eventsTs(df)
 
   /** Stream the events table from a staged directory (the streaming file
     * source wants a directory; a real deployment points at the ingest

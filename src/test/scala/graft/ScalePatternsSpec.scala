@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.TopKTerms
-import graft.operators.Salting
+import graft.operators.{Folds, Salting}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -58,6 +58,35 @@ class ScalePatternsSpec extends AnyFunSuite with SparkSuite {
       rs.sortBy(r => (r._2, r._3)).take(5).map(r => (q, r._3))
     }.toSet
     assert(gotAsc == expAsc)
+  }
+
+  test("orderedSum/orderedList fold in key order under any partitioning, bit for bit") {
+    val rnd = new scala.util.Random(11)
+    // per group: two cancelling pairs of large values among small ones,
+    // so what survives depends on where the small values fall
+    val small = Seq(1.0, 0.5, 3.0, -1.0)
+    def vals = rnd.shuffle(Seq(1e16, -1e16, math.pow(2, 60), -math.pow(2, 60)) ++
+      Seq.fill(20)(small(rnd.nextInt(small.size))))
+    // 6 groups × 24 rows; (v, k2) is unique per group and the key is
+    // deliberately named `v`, like the fold's own value field
+    val rows = (0 until 6).flatMap { g =>
+      vals.zipWithIndex.map { case (x, i) => (g, i / 3, i % 3, x) }
+    }
+    val byKey = rows.groupBy(_._1).map { case (g, rs) => g -> rs.sortBy(r => (r._2, r._3)).map(_._4) }
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    // the data must be order-sensitive for the check to mean anything
+    assert(byKey.values.exists(xs => bits(xs.foldLeft(0.0)(_ + _)) != bits(xs.reverse.foldLeft(0.0)(_ + _))))
+    val df = rnd.shuffle(rows).toDF("g", "v", "k2", "x")
+    for (in <- Seq(df.repartition(7), df.coalesce(1))) {
+      val got = in.groupBy("g").agg(
+          Folds.orderedSum($"x", $"v", $"k2").as("s"), Folds.orderedList($"x", $"v", $"k2").as("l"))
+        .as[(Int, Double, Seq[Double])].collect()
+      assert(got.length == 6)
+      got.foreach { case (g, sum, list) =>
+        assert(bits(sum) == bits(byKey(g).foldLeft(0.0)(_ + _)), s"group $g sum")
+        assert(list.map(bits) == byKey(g).map(bits), s"group $g list")
+      }
+    }
   }
 
   test("KMinHashes monoid equals sort-take on random hashes, any partitioning") {
